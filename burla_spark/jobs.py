@@ -701,7 +701,7 @@ class ProcessDetachedJob:
         self,
         timeout: float | None = None,
         stdout_sink: Callable[[int, str], None] | None = None,
-        poll_s: float = 0.5,
+        poll_s: float = 0.05,
     ) -> list:
         """Wait for the runner to finish, then load the journaled
         results (raises the job's error with original-type fidelity,

@@ -43,8 +43,27 @@ decision); a failed push — driver unreachable, channel disabled —
 leaves stdout in the row and it is delivered with the result. Task
 retries can replay a push, so the driver additionally dedups log
 deliveries by input index (first delivery wins — rpm.py). Log delivery
-must never fail a job: every socket operation is wrapped and silently
-falls back.
+must never fail a job: every socket operation is wrapped and falls
+back, and the server's ``stats`` counts what it swallowed.
+
+Close protocol: the selector waits with no timeout, and a self-pipe
+(``socket.socketpair``) is registered next to the listener. ``__exit__``
+sets the closed flag, writes one byte to the pipe and joins the reader
+(bounded at 2 s). The woken reader then
+
+1. accepts the connections still in the listen backlog,
+2. reads every connection until it would block or hits EOF, handing
+   each complete frame to the sink,
+3. only then closes the connections, the listener, the selector and
+   the pipe.
+
+So a frame a worker had fully sent before the close is delivered, not
+dropped with the socket buffers. One race remains: a frame sent AFTER
+the close is lost. In local mode a worker pushes an input's log frame
+before its result, so the log is in the driver's buffers by the time
+the consumer has seen every result. On remote executors the log frame
+travels on its own connection and can still arrive after its result,
+and so after the close.
 """
 
 from __future__ import annotations
@@ -230,6 +249,9 @@ class _Conn:
         self.authed = False
 
 
+_WAKE = object()  # selector tag of the close self-pipe
+
+
 class MessageStreamServer:
     """Driver-side listener: accepts authenticated worker connections
     and invokes ``sink(frame_bytes)`` for each frame as it arrives
@@ -237,13 +259,24 @@ class MessageStreamServer:
     appending to a list or putting on a queue.Queue both are).
 
     Use as a context manager around the job action; ``advertise`` is
-    the (host, port, token) workers need to connect."""
+    the (host, port, token) workers need to connect. ``stats`` counts
+    what the channel delivered and what it swallowed: ``frames``
+    handed to the sink, ``drained_at_close`` (of those, the ones read
+    after ``__exit__``), ``sink_errors``, ``dropped_conns`` (token
+    mismatch or oversize frame) and ``reader_errors``."""
 
     def __init__(self, sink: Callable[[bytes], None], host: str, max_msg: int = _MAX_MSG):
         self._frame_sink = sink
         self._host = host
         self._max_msg = max_msg
         self._token = secrets.token_bytes(_TOKEN_LEN)
+        self.stats = {
+            "frames": 0,
+            "drained_at_close": 0,
+            "sink_errors": 0,
+            "dropped_conns": 0,
+            "reader_errors": 0,
+        }
         self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
         self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
         # advertised interface ONLY — a bind failure disables the
@@ -254,8 +287,13 @@ class MessageStreamServer:
         self._srv.setblocking(False)
         self._port = self._srv.getsockname()[1]
         self._closed = False
+        # self-pipe: __exit__ writes one byte so the reader wakes on the
+        # close itself instead of on a select timeout.
+        self._wake_r, self._wake_w = socket.socketpair()
+        self._wake_r.setblocking(False)
         self._sel = selectors.DefaultSelector()
         self._sel.register(self._srv, selectors.EVENT_READ, None)
+        self._sel.register(self._wake_r, selectors.EVENT_READ, _WAKE)
         self._thread: threading.Thread | None = None
 
     @property
@@ -275,24 +313,45 @@ class MessageStreamServer:
     def _serve(self) -> None:
         try:
             while not self._closed:
-                for key, _ in self._sel.select(timeout=0.2):
+                for key, _ in self._sel.select():
                     if key.data is None:
                         self._accept()
-                    else:
+                    elif key.data is not _WAKE:
                         self._service(key)
+            self._drain_at_close()
         except Exception:  # noqa: BLE001 — message channel is best-effort
-            pass
+            self.stats["reader_errors"] += 1
         finally:
-            for key in list(self._sel.get_map().values()):
-                if key.data is not None:
-                    try:
-                        key.fileobj.close()
-                    except OSError:
-                        pass
+            self._release()
+
+    def _drain_at_close(self) -> None:
+        """Deliver what workers sent before the close: accept the
+        connections still in the backlog, then read every connection
+        until it would block or hits EOF."""
+        before = self.stats["frames"]
+        self._accept()
+        for key in list(self._sel.get_map().values()):
+            if isinstance(key.data, _Conn):
+                while self._service(key):
+                    pass
+        self.stats["drained_at_close"] = self.stats["frames"] - before
+
+    def _release(self) -> None:
+        for key in list(self._sel.get_map().values()):
+            if isinstance(key.data, _Conn):
+                try:
+                    key.fileobj.close()
+                except OSError:
+                    pass
+        for sock in (self._srv, self._wake_r, self._wake_w):
             try:
-                self._sel.close()
-            except Exception:  # noqa: BLE001
+                sock.close()
+            except OSError:
                 pass
+        try:
+            self._sel.close()
+        except Exception:  # noqa: BLE001
+            pass
 
     def _accept(self) -> None:
         while True:
@@ -303,23 +362,29 @@ class MessageStreamServer:
             conn.setblocking(False)
             self._sel.register(conn, selectors.EVENT_READ, _Conn())
 
-    def _service(self, key) -> None:
+    def _service(self, key) -> bool:
+        """Read once from a connection. True iff data was read and the
+        connection stays open (more may be buffered)."""
         conn, st = key.fileobj, key.data
         try:
             data = conn.recv(_RECV_CHUNK)
         except BlockingIOError:
-            return
+            return False
         except OSError:
             data = b""
-        if not data or not self._drain(st, data):
-            try:
-                self._sel.unregister(conn)
-            except (KeyError, ValueError):
-                pass
-            try:
-                conn.close()
-            except OSError:
-                pass
+        if data and self._drain(st, data):
+            return True
+        if data:
+            self.stats["dropped_conns"] += 1
+        try:
+            self._sel.unregister(conn)
+        except (KeyError, ValueError):
+            pass
+        try:
+            conn.close()
+        except OSError:
+            pass
+        return False
 
     def _drain(self, st: _Conn, data: bytes | None = None) -> bool:
         """Consume complete frames from the connection buffer; False
@@ -344,19 +409,22 @@ class MessageStreamServer:
                 return True
             frame = bytes(buf[_LEN.size : _LEN.size + size])
             del buf[: _LEN.size + size]
+            self.stats["frames"] += 1
             try:
                 self._frame_sink(frame)
             except Exception:  # noqa: BLE001 — sink bugs can't kill the reader
-                pass
+                self.stats["sink_errors"] += 1
 
     def __exit__(self, *exc) -> None:
         self._closed = True
+        if self._thread is None:  # never entered: no reader to wake
+            self._release()
+            return
         try:
-            self._srv.close()
+            self._wake_w.send(b"\0")
         except OSError:
-            pass
-        if self._thread is not None:
-            self._thread.join(timeout=2)
+            pass  # already released by the reader
+        self._thread.join(timeout=2)
 
 
 class LogStreamServer(MessageStreamServer):

@@ -14,8 +14,10 @@ Semantics preserved (reference cites in parens):
   documented in SURVEY.md §7.3.2)
 * errors re-raise on the driver with the original type, message, remote
   traceback text and ``burla_input_index`` (_node.py:638-663)
-* per-input stdout is captured and surfaced (worker_client.py:154-338;
-  arrives with the result, not live — SURVEY.md §7.3.1)
+* per-input stdout is captured and streamed live to the driver as each
+  input finishes (worker_client.py:154-338), through
+  ``logs.LogStreamServer``; it falls back to riding with the result row
+  when the live push fails
 
 Spark replaces the reference's entire transport/scheduling machinery
 (scatter, queues, work stealing, ack/replay, heartbeats — §2
@@ -898,11 +900,14 @@ def _stream_results(spark, build_result_df, handle, log_server, n_expected):
         def sink(frame: bytes) -> None:
             item = decode_result_batch(frame)
             while True:
+                # once closed, never block: the listener drains its
+                # buffered frames through this sink at close.
+                closed = res_server is None or res_server.closed
                 try:
-                    q.put(item, timeout=0.2)
+                    q.put(item, not closed, 0.2)
                     return
                 except _queue.Full:
-                    if res_server is None or res_server.closed:
+                    if closed:
                         return  # consumer gone — drop; job is cancelling
         res_server = MessageStreamServer(
             sink,

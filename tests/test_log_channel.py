@@ -1,7 +1,9 @@
 """Security + scale contract of the driver-side message channel
 (burla_spark/logs.py): host-bound listener, per-job token auth, a
-pickle-free transport envelope, one selector-driven reader thread, and
-first-delivery-wins log dedup. Pure-socket tests — no Spark session."""
+pickle-free transport envelope, one selector-driven reader thread, an
+event-driven close that drains buffered frames, swallowed-failure
+counters, and first-delivery-wins log dedup. Pure-socket tests — no
+Spark session."""
 
 from __future__ import annotations
 
@@ -10,6 +12,7 @@ import queue
 import socket
 import threading
 import time
+from collections import Counter
 
 import pytest
 
@@ -180,6 +183,99 @@ def test_selector_reader_handles_256_concurrent_pushers():
         # thread-per-connection would have spawned ~256 reader threads;
         # the selector design adds exactly one.
         assert threading.active_count() <= baseline + 2
+
+
+# ---------------------------------------------------------------------------
+# close protocol: wake on an event, drain what workers already sent
+# ---------------------------------------------------------------------------
+def test_exit_wakes_idle_reader_immediately():
+    for _ in range(5):
+        srv = MessageStreamServer(lambda b: None, HOST).__enter__()
+        time.sleep(0.05)  # reader is parked in select
+        t0 = time.perf_counter()
+        srv.__exit__()
+        took = time.perf_counter() - t0
+        assert took < 0.05, f"__exit__ took {took:.3f}s"
+        assert not srv._thread.is_alive()
+
+
+def test_frames_sent_just_before_exit_delivered_exactly_once():
+    got: list = []
+    srv = MessageStreamServer(got.append, HOST).__enter__()
+    client = MessageStreamClient(*srv.advertise)
+    for i in range(500):
+        assert client.send_frame(f"f{i}".encode())
+    srv.__exit__()
+    client.close()
+    counts = Counter(got)
+    assert set(counts) == {f"f{i}".encode() for i in range(500)}
+    assert set(counts.values()) == {1}
+    assert srv.stats["frames"] == 500
+
+
+def test_connection_in_backlog_at_close_is_drained():
+    """Park the reader inside the sink, connect a second client (it
+    can only sit in the listen backlog), close, then release the sink:
+    the backlog connection's frames must still reach the sink."""
+    release = threading.Event()
+    got: list = []
+
+    def sink(frame: bytes) -> None:
+        if frame == b"park":
+            release.wait(5)
+        got.append(frame)
+
+    srv = MessageStreamServer(sink, HOST).__enter__()
+    first = MessageStreamClient(*srv.advertise)
+    assert first.send_frame(b"park")
+    deadline = time.time() + 5
+    while srv.stats["frames"] == 0 and time.time() < deadline:
+        time.sleep(0.01)
+    late = MessageStreamClient(*srv.advertise)
+    for i in range(20):
+        assert late.send_frame(f"late{i}".encode())
+    closer = threading.Thread(target=srv.__exit__)
+    closer.start()
+    while not srv.closed:
+        time.sleep(0.001)
+    release.set()
+    closer.join(5)
+    assert not closer.is_alive()
+    first.close()
+    late.close()
+    assert got == [b"park"] + [f"late{i}".encode() for i in range(20)]
+    assert srv.stats["drained_at_close"] == 20
+
+
+def test_stats_count_sink_errors_and_dropped_connections():
+    got: list = []
+
+    def sink(frame: bytes) -> None:
+        if frame == b"bad":
+            raise ValueError("sink bug")
+        got.append(frame)
+
+    with MessageStreamServer(sink, HOST, max_msg=64) as srv:
+        client = MessageStreamClient(*srv.advertise, max_msg=1 << 20)
+        assert client.send_frame(b"one")
+        assert client.send_frame(b"bad")
+        assert client.send_frame(b"two")
+        client.close()
+        with socket.create_connection(srv.advertise[:2], timeout=2) as s:
+            s.sendall(b"X" * 16)  # wrong token
+            s.settimeout(3)
+            assert s.recv(1) == b""
+        oversize = MessageStreamClient(*srv.advertise, max_msg=1 << 20)
+        assert oversize.send_frame(b"y" * 1000)
+        deadline = time.time() + 5
+        while srv.stats["dropped_conns"] < 2 and time.time() < deadline:
+            time.sleep(0.01)
+        oversize.close()
+    assert got == [b"one", b"two"]
+    assert srv.stats["sink_errors"] == 1
+    assert srv.stats["frames"] == 3
+    assert srv.stats["dropped_conns"] == 2
+    assert srv.stats["reader_errors"] == 0
 
 
 # ---------------------------------------------------------------------------

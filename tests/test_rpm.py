@@ -277,6 +277,38 @@ def test_live_log_streaming_mid_job(spark):
     assert t_done - earliest > 2.0, "no stdout arrived before job completion"
 
 
+def _print_index(x):
+    print(f"line-{x}")
+    return x
+
+
+def test_generator_jobs_deliver_every_stdout_line_once(spark):
+    """Back-to-back generator jobs: every result and every live stdout
+    line arrives exactly once. Log frames still buffered on the driver
+    when the last result is consumed must be drained at close, not
+    dropped with the listener. The sink is slowed a little so the log
+    reader lags behind the result stream, as it does under a busy
+    consumer."""
+    import time
+
+    n = 2000
+    for job in range(5):
+        lines: list = []
+
+        def sink(idx, text):
+            time.sleep(0.0002)
+            lines.append((idx, text))
+
+        results = list(
+            remote_parallel_map(
+                _print_index, range(n), spark=spark, generator=True,
+                stdout_sink=sink,
+            )
+        )
+        assert sorted(results) == list(range(n)), f"job {job}"
+        assert sorted(lines) == [(i, f"line-{i}\n") for i in range(n)], f"job {job}"
+
+
 def test_generator_completion_order(spark):
     """generator=True must yield in COMPLETION order (reference
     parity): input 0 sleeps 3s — under the old partition-ordered
