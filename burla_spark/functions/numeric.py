@@ -35,11 +35,6 @@ def money_avg(col: str | Column, alias: str) -> Column:
     return (F.sum(dec(c)).cast("double") / F.count(c)).alias(alias)
 
 
-def sql_dec(expr: str) -> str:
-    """DuckDB-side mirror of :func:`dec` for oracle SQL strings."""
-    return f"CAST({expr} AS DECIMAL(18,4))"
-
-
 def let(col: Column, fn) -> Column:
     """Bind a computed column once per row and reuse it.
 

@@ -21,14 +21,16 @@ completed input's result into ``partial/`` as tasks finish, so
 from the acked set instead of restarting — the reference's ack/replay
 contract (_node.py:463-524) re-expressed as a task-commit-style log.
 The journal dir comes from ``spark.burla.jobJournalDir`` (point it at
-shared storage on a real cluster — executors write the parquet) and
-defaults to ``~/.burla_spark/jobs`` for the single-machine story.
+shared storage on a real cluster — executors write the ``partial/``
+acks; the driver writes ``results.parquet``) and defaults to
+``~/.burla_spark/jobs`` for the single-machine story.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import sys
 import threading
 import time
 import uuid
@@ -495,16 +497,13 @@ def _cleanup_run_artifacts(base: str, job_id: str) -> None:
 
 
 def journal_finish(
-    spark: SparkSession, job_id: str, result_rows, schema: str,
-    journal_dir: str | None = None,
+    spark: SparkSession, job_id: str, tbl, journal_dir: str | None = None,
 ) -> None:
-    """Write the job's raw result rows as parquet, then flip the
-    manifest to done — order matters: a 'done' manifest guarantees the
-    results table is complete.
+    """Write the job's RESULT_SCHEMA pyarrow Table as parquet, then
+    flip the manifest to done — order matters: a 'done' manifest
+    guarantees the results table is complete.
 
-    ``result_rows`` is either a pyarrow Table (the Arrow collect path)
-    or a list of Rows/tuples (repack/GPU row paths). Both write via a
-    direct pyarrow parquet write on the driver: the rows are already
+    A direct pyarrow parquet write on the driver: the rows are already
     driver-local, so the old ``spark.createDataFrame(rows).write``
     round-trip (per-row re-serialization through the JVM + a one-task
     Spark job) was pure overhead — ~30 s of it at a million results."""
@@ -514,13 +513,6 @@ def journal_finish(
     ddir = os.path.join(base, job_id)
     os.makedirs(ddir, exist_ok=True)
     out = os.path.join(ddir, "results.parquet")
-    from burla_spark.rpm import result_table_from_tuples
-
-    tbl = (
-        result_rows
-        if hasattr(result_rows, "num_rows")
-        else result_table_from_tuples([tuple(r) for r in result_rows])
-    )
     if os.path.isdir(out):  # an older Spark-written directory layout
         import shutil
 
@@ -632,6 +624,7 @@ def fetch_results(
             f"job {job_id} failed before journaling results: "
             f"{manifest.get('error_type')}: {manifest.get('error_msg')}"
         )
+    from burla_spark.logs import once_per_index
     from burla_spark.rpm import materialize_results_arrow
 
     # direct pyarrow read (no Spark job, no Row materialization):
@@ -642,7 +635,8 @@ def fetch_results(
     path = os.path.join(base, job_id, "results.parquet")
     tbl = pq.read_table(path)
     tbl = tbl.sort_by("idx")  # journal order is file order — normalize
-    return materialize_results_arrow(tbl, stdout_sink)
+    sink = stdout_sink or (lambda idx, text: sys.stdout.write(text))
+    return materialize_results_arrow(tbl, once_per_index(sink))
 
 
 class ProcessDetachedJob:

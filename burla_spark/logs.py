@@ -77,9 +77,7 @@ import threading
 from collections.abc import Callable
 
 _LEN = struct.Struct(">I")
-_I32 = struct.Struct(">i")
 _LOG_HEAD = struct.Struct(">q")
-_ROW_HEAD = struct.Struct(">qB")
 _MAX_MSG = 1_000_000  # mirror the reference's 1 MB log-response cap
 _TOKEN_LEN = 16
 _RECV_CHUNK = 1 << 16
@@ -101,35 +99,6 @@ def decode_log_frame(frame: bytes) -> tuple[int, str]:
 # error_tb, error_pkl) — matches rpm.RESULT_SCHEMA. Optional fields are
 # length-prefixed with -1 meaning NULL; text fields are utf-8.
 _ROW_TEXT_FIELDS = (False, True, True, True, True, False)  # after idx/is_error
-
-
-def encode_result_row(tup: tuple) -> bytes:
-    idx, is_error = tup[0], tup[1]
-    parts = [_ROW_HEAD.pack(int(idx), 1 if is_error else 0)]
-    for value, is_text in zip(tup[2:], _ROW_TEXT_FIELDS):
-        if value is None:
-            parts.append(_I32.pack(-1))
-        else:
-            raw = value.encode("utf-8", "replace") if is_text else bytes(value)
-            parts.append(_I32.pack(len(raw)))
-            parts.append(raw)
-    return b"".join(parts)
-
-
-def decode_result_row(frame: bytes) -> tuple:
-    idx, is_error = _ROW_HEAD.unpack_from(frame)
-    off = _ROW_HEAD.size
-    fields: list = []
-    for is_text in _ROW_TEXT_FIELDS:
-        (n,) = _I32.unpack_from(frame, off)
-        off += _I32.size
-        if n < 0:
-            fields.append(None)
-        else:
-            raw = frame[off : off + n]
-            off += n
-            fields.append(raw.decode("utf-8", "replace") if is_text else raw)
-    return (idx, bool(is_error), *fields)
 
 
 def encode_result_batch(rows: list[tuple]) -> bytes:

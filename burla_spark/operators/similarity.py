@@ -144,29 +144,6 @@ def _plane_signs(p: int, table: int, dim: int) -> list[float]:
     return [1.0 if rng.random() < 0.5 else -1.0 for _ in range(dim)]
 
 
-def _hyperplane_sign_bits(vec, num_planes: int, dim: int, table: int = 0) -> "F.Column":
-    """LSH signature: sign of <v, h_p> for deterministic pseudo-random
-    ±1 hyperplanes (literal sign arrays — no per-element hashing)."""
-    def plane_dot(p: int):
-        signs = F.lit(_plane_signs(p, table, dim))
-        return F.aggregate(
-            F.zip_with(vec, signs, lambda x, s: x.cast("double") * s),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    bits = [
-        F.when(plane_dot(p) > 0, F.shiftleft(F.lit(1).cast("long"), p)).otherwise(
-            F.lit(0).cast("long")
-        )
-        for p in range(num_planes)
-    ]
-    out = bits[0]
-    for b in bits[1:]:
-        out = out.bitwiseOR(b)
-    return out
-
-
 def _lsh_bucket_udf(num_planes: int, num_tables: int, dim: int):
     """Vectorized multi-table bucket computation: one numpy matmul per
     Arrow batch ((B×dim) @ (dim×tables·planes)) — the dense-linear-

@@ -50,6 +50,10 @@ RESULT_SCHEMA = (
     "idx long, is_error boolean, payload binary, stdout string, "
     "error_type string, error_msg string, error_tb string, error_pkl binary"
 )
+RESULT_COLUMNS = (
+    "idx", "is_error", "payload", "stdout",
+    "error_type", "error_msg", "error_tb", "error_pkl",
+)
 
 # Types whose plain-pickle form is environment-independent (no module
 # references that could be missing on the other side of the boundary,
@@ -213,6 +217,25 @@ def _user_module_by_value(cp, function_: Callable):
                 pass
 
 
+def _error_fields(pickler, exc: Exception) -> tuple:
+    """(error_type, error_msg, error_tb, error_pkl) of a RESULT_SCHEMA
+    row; call inside the ``except`` that caught ``exc``.
+
+    ``error_pkl`` ships (class, args, state) — NOT the exception object:
+    pickling an exception replays ``cls(*args)`` on load, which explodes
+    for custom __init__ signatures; __new__ + state restore works for
+    any class. cloudpickle serializes locally-defined exception classes
+    by value. The 1 MB cap mirrors the reference's result/log response
+    cap (job_endpoints.py:28-30) — bigger errors fall back to text-only."""
+    try:
+        blob = pickler.dumps((type(exc), exc.args, dict(vars(exc))))
+        if len(blob) > 1_000_000:
+            blob = None
+    except Exception:  # noqa: BLE001 — text-only fallback
+        blob = None
+    return type(exc).__name__, str(exc), traceback.format_exc(), blob
+
+
 def _make_udf(
     function_pkl: bytes,
     capture_stdout: bool,
@@ -295,64 +318,39 @@ def _make_udf(
 
             fn = pickle.loads(function_pkl)
             for batch in batches:
-                out: dict[str, list] = {
-                    "idx": [], "is_error": [], "payload": [], "stdout": [],
-                    "error_type": [], "error_msg": [], "error_tb": [],
-                    "error_pkl": [],
-                }
+                out: dict[str, list] = {name: [] for name in RESULT_COLUMNS}
                 for idx, blob in zip(batch["idx"], batch["payload"]):
+                    idx = int(idx)
                     arg = pickle.loads(bytes(blob))
                     buf = io.StringIO()
+                    # the result pickle runs inside the try: a result
+                    # that cannot be pickled is an error of ITS input
                     try:
                         if capture_stdout:
                             with redirect_stdout(buf):
                                 result = fn(*arg) if isinstance(arg, tuple) else fn(arg)
                         else:
                             result = fn(*arg) if isinstance(arg, tuple) else fn(arg)
-                        text = buf.getvalue()
-                        if log_client is not None and log_client.send(int(idx), text):
-                            text = ""  # delivered live — don't re-deliver with the row
-                        out["idx"].append(int(idx))
-                        out["is_error"].append(False)
-                        out["payload"].append(_fast_dumps(result_pickler, result))
-                        out["stdout"].append(text)
-                        out["error_type"].append(None)
-                        out["error_msg"].append(None)
-                        out["error_tb"].append(None)
-                        out["error_pkl"].append(None)
+                        payload = _fast_dumps(result_pickler, result)
+                        error = (None, None, None, None)
                     except Exception as exc:  # noqa: BLE001 — user code may raise anything
-                        text = buf.getvalue()
-                        if log_client is not None and log_client.send(int(idx), text):
-                            text = ""
-                        out["idx"].append(int(idx))
-                        out["is_error"].append(True)
-                        out["payload"].append(None)
-                        out["stdout"].append(text)
-                        out["error_type"].append(type(exc).__name__)
-                        out["error_msg"].append(str(exc))
-                        out["error_tb"].append(traceback.format_exc())
-                        # ship (class, args, state) — NOT the exception
-                        # object: pickling an exception replays
-                        # ``cls(*args)`` on load, which explodes for custom
-                        # __init__ signatures; __new__ + state restore works
-                        # for any class. cloudpickle serializes
-                        # locally-defined exception classes by value. 1 MB
-                        # cap mirrors the reference's result/log response
-                        # cap (job_endpoints.py:28-30) — bigger errors fall
-                        # back to text-only.
-                        try:
-                            blob = result_pickler.dumps(
-                                (type(exc), exc.args, dict(vars(exc)))
-                            )
-                            if len(blob) > 1_000_000:
-                                blob = None
-                        except Exception:
-                            blob = None
-                        out["error_pkl"].append(blob)
+                        payload = None
+                        error = _error_fields(result_pickler, exc)
+                    text = buf.getvalue()
+                    if log_client is not None and log_client.send(idx, text):
+                        text = ""  # delivered live — don't re-deliver with the row
+                    out["idx"].append(idx)
+                    out["is_error"].append(payload is None)
+                    out["payload"].append(payload)
+                    out["stdout"].append(text)
+                    error_type, error_msg, error_tb, error_pkl = error
+                    out["error_type"].append(error_type)
+                    out["error_msg"].append(error_msg)
+                    out["error_tb"].append(error_tb)
+                    out["error_pkl"].append(error_pkl)
                 if partial_dir is not None and out["idx"]:
                     try:
                         import json as _json
-                        import os as _os
                         import uuid as _uuid
 
                         # a task of a canceled/failed job may finish a batch
@@ -373,16 +371,7 @@ def _make_udf(
                         if not still_running:
                             raise _SkipAck()
                         _os.makedirs(partial_dir, exist_ok=True)
-                        rows_pkl = pickle.dumps(
-                            list(
-                                zip(
-                                    out["idx"], out["is_error"], out["payload"],
-                                    out["stdout"], out["error_type"],
-                                    out["error_msg"], out["error_tb"],
-                                    out["error_pkl"],
-                                )
-                            )
-                        )
+                        rows_pkl = pickle.dumps(list(zip(*out.values())))
                         path = _os.path.join(
                             partial_dir, f"part-{_uuid.uuid4().hex}.pkl"
                         )
@@ -398,11 +387,7 @@ def _make_udf(
                     # _STREAM_BATCH_ROWS rows / ~1 MB of payload.
                     buf: list[tuple] = []
                     buf_bytes = 0
-                    for rec in zip(
-                        out["idx"], out["is_error"], out["payload"],
-                        out["stdout"], out["error_type"], out["error_msg"],
-                        out["error_tb"], out["error_pkl"],
-                    ):
+                    for rec in zip(*out.values()):
                         buf.append(rec)
                         buf_bytes += (len(rec[2]) if rec[2] else 0) + 64
                         if (
@@ -689,25 +674,13 @@ def _ram_parallelism_cap(spark: SparkSession, func_ram) -> int:
     the executor count — the reference packs per node
     (a 10-executor × 8 GB cluster at func_ram=4G runs 20 concurrent
     tasks, not 2; spark.executor.instances defaults to 1 which also
-    covers local mode). 'dynamic'
-    means 4 GB (the reference's default); int means GB; strings accept
-    '8', '8G', '8GB', '512M'. Unparseable values fall back to no cap —
-    sizing must never fail a job."""
+    covers local mode). ``func_ram`` is read by :func:`_parse_ram_gb`;
+    unparseable values fall back to no cap — sizing must never fail a
+    job."""
+    gb = _parse_ram_gb(func_ram)
+    if gb is None or gb <= 0:
+        return 1 << 30
     try:
-        if isinstance(func_ram, str):
-            s = func_ram.strip().upper()
-            if s == "DYNAMIC":
-                gb = 4.0
-            elif s.endswith("GB") or s.endswith("G"):
-                gb = float(s.rstrip("GB"))
-            elif s.endswith("MB") or s.endswith("M"):
-                gb = float(s.rstrip("MB")) / 1024
-            else:
-                gb = float(s)
-        else:
-            gb = float(func_ram)
-        if gb <= 0:
-            return 1 << 30
         mem = (
             spark.conf.get("spark.executor.memory", None)
             or spark.conf.get("spark.driver.memory", None)
@@ -736,11 +709,7 @@ def result_table_from_tuples(tuples, schema=None):
     conversion)."""
     import pyarrow as pa
 
-    cols = list(zip(*tuples)) if tuples else [[] for _ in range(8)]
-    names = [
-        "idx", "is_error", "payload", "stdout",
-        "error_type", "error_msg", "error_tb", "error_pkl",
-    ]
+    cols = list(zip(*tuples)) if tuples else [[] for _ in RESULT_COLUMNS]
     if schema is None:
         schema = pa.schema(
             [
@@ -756,98 +725,49 @@ def result_table_from_tuples(tuples, schema=None):
         )
     arrays = [
         pa.array(list(col), type=schema.field(name).type)
-        for col, name in zip(cols, names)
+        for col, name in zip(cols, RESULT_COLUMNS)
     ]
     return pa.Table.from_arrays(arrays, schema=schema)
 
 
-def materialize_results_arrow(tbl, stdout_sink=None, _deliver=None) -> list:
-    """Columnar twin of :func:`materialize_results` for results held as
-    a pyarrow Table (the collect and journal-fetch paths): identical
-    user-facing semantics — per-row stdout delivery in row order,
-    first error row re-raised with original-type fidelity, payloads
-    unpickled — but the common all-clean case runs as two vectorized
-    column scans instead of a million Row-attribute reads."""
+def _result_value(row, deliver):
+    """One RESULT_SCHEMA row (any 8-tuple in RESULT_COLUMNS order; a
+    Spark Row is a tuple) to its user-facing value: deliver its stdout,
+    re-raise its error with original-type fidelity, or unpickle its
+    payload."""
+    idx, is_error, payload, stdout, error_type, error_msg, error_tb, error_pkl = row
+    if stdout:
+        deliver(idx, stdout)
+    if is_error:
+        raise _rehydrate_error(error_pkl, error_type, error_msg, error_tb, idx)
+    return pickle.loads(payload)
+
+
+def materialize_results_arrow(tbl, deliver) -> list:
+    """Turn a RESULT_SCHEMA pyarrow Table into the user-facing result
+    list. Every non-streaming mode (collect, repack waves, GPU, detach)
+    and the journal fetch end here. ``deliver(idx, text)`` receives the
+    stdout rows carry; callers pass a ``logs.once_per_index`` sink so
+    row-carried stdout dedups against live deliveries. The common
+    all-clean case (no error, no stdout) is two vectorized column scans
+    and one unpickle per payload; otherwise every row goes through
+    :func:`_result_value` in row order, so the first error row raises
+    after the stdout of the rows before it."""
     import pyarrow.compute as pc
 
-    n = tbl.num_rows
-    if n == 0:
+    if tbl.num_rows == 0:
         return []
     has_err = pc.any(tbl.column("is_error")).as_py()
-    so = tbl.column("stdout")
-    has_stdout = bool(
-        pc.any(pc.not_equal(so.fill_null(""), "")).as_py()
-    )
+    has_stdout = pc.any(
+        pc.not_equal(tbl.column("stdout").fill_null(""), "")
+    ).as_py()
     if not has_err and not has_stdout:
         return [pickle.loads(p) for p in tbl.column("payload").to_pylist()]
-    if _deliver is not None:
-        # live collect path: share the caller's once-per-index sink so
-        # row-carried stdout dedups against LIVE TCP deliveries too.
-        deliver = _deliver
-    else:
-        from burla_spark.logs import once_per_index
-
-        sink = stdout_sink if stdout_sink is not None else (
-            lambda idx, text: sys.stdout.write(text)
-        )
-        deliver = once_per_index(sink)
-    idxs = tbl.column("idx").to_pylist()
-    errs = tbl.column("is_error").to_pylist()
-    stdouts = so.to_pylist()
-    payloads = tbl.column("payload").to_pylist()
-    out = []
-    for i in range(n):
-        if stdouts[i]:
-            deliver(idxs[i], stdouts[i])
-        if errs[i]:
-            raise _rehydrate_error(
-                tbl.column("error_pkl")[i].as_py(),
-                tbl.column("error_type")[i].as_py(),
-                tbl.column("error_msg")[i].as_py(),
-                tbl.column("error_tb")[i].as_py(),
-                idxs[i],
-            )
-        out.append(pickle.loads(payloads[i]))
-    return out
+    cols = [tbl.column(name).to_pylist() for name in RESULT_COLUMNS]
+    return [_result_value(row, deliver) for row in zip(*cols)]
 
 
-def materialize_results(rows, stdout_sink=None) -> list:
-    """Turn raw RESULT_SCHEMA rows into the user-facing result list:
-    deliver any undelivered stdout (deduped by input index), re-raise
-    the first error row with original-type fidelity, unpickle payloads.
-    Shared by the live collect path and the detached-job journal fetch
-    (jobs.fetch_results), so a second process materializes identically."""
-    from burla_spark.logs import once_per_index
-
-    sink = stdout_sink if stdout_sink is not None else (
-        lambda idx, text: sys.stdout.write(text)
-    )
-    deliver = once_per_index(sink)
-    out = []
-    for row in rows:
-        if row.stdout:
-            deliver(row.idx, row.stdout)
-        if row.is_error:
-            raise _rehydrate_error(
-                row.error_pkl, row.error_type, row.error_msg, row.error_tb, row.idx
-            )
-        out.append(pickle.loads(bytes(row.payload)))
-    return out
-
-
-class _ResultRow:
-    """Attribute-access adapter for result tuples pushed through the
-    completion-order channel (same fields as RESULT_SCHEMA rows)."""
-
-    __slots__ = ("idx", "is_error", "payload", "stdout", "error_type",
-                 "error_msg", "error_tb", "error_pkl")
-
-    def __init__(self, tup):
-        for name, val in zip(self.__slots__, tup):
-            setattr(self, name, val)
-
-
-def _stream_results(spark, build_result_df, handle, log_server, n_expected):
+def _stream_results(spark, build_result_df, deliver, log_server, n_expected):
     """COMPLETION-ordered result generator (reference parity:
     `_remote_parallel_map.py:703-715` yields from a client-side Queue in
     the order results finish).
@@ -925,7 +845,7 @@ def _stream_results(spark, build_result_df, handle, log_server, n_expected):
                 if log_server is not None:
                     log_server.__enter__()
                 for row in result_df.toLocalIterator(prefetchPartitions=True):
-                    yield handle(row)
+                    yield _result_value(row, deliver)
             finally:
                 if log_server is not None:
                     log_server.__exit__()
@@ -1001,14 +921,13 @@ def _stream_results(spark, build_result_df, handle, log_server, n_expected):
                         continue
                     seen.add(idx)
                     # fast path for the overwhelmingly common row shape
-                    # (no stdout to deliver, no error): skip the
-                    # attribute-adapter object and handle()'s branchwork
-                    # — at 1M results the per-row object construction
-                    # and attribute loads are driver-serial wall time.
+                    # (no stdout to deliver, no error): skip
+                    # _result_value's unpacking and branchwork — at 1M
+                    # results that per-row work is driver-serial wall time.
                     if not tup[1] and not tup[3]:  # not is_error, no stdout
                         yield pickle.loads(tup[2])
                     else:
-                        yield handle(_ResultRow(tup))
+                        yield _result_value(tup, deliver)
         finally:
             # cancel BEFORE tearing down the listener: abandonment or
             # an error row must stop the action, not strand tasks whose
@@ -1309,20 +1228,11 @@ def remote_parallel_map(
     # address baked into the UDF) inside _stream_results.
     result_df = None if (repack or generator) else _build_result_df(rows, n_parts)
 
-    def handle(row):
-        if row.stdout:
-            deliver(row.idx, row.stdout)
-        if row.is_error:
-            raise _rehydrate_error(
-                row.error_pkl, row.error_type, row.error_msg, row.error_tb, row.idx
-            )
-        return pickle.loads(bytes(row.payload))
-
     if generator:
         return _stream_results(
             spark,
             lambda addr: _build_result_df(rows, n_parts, result_addr=addr),
-            handle,
+            deliver,
             log_server,
             len(rows),
         )
@@ -1332,8 +1242,26 @@ def remote_parallel_map(
     # RAM-pressure change takes effect within a couple of waves.
     WAVES_PER_WIDTH = 4
 
-    def _run_collect_waves():
-        out = []
+    def _collect(df):
+        # every non-streaming mode collects a RESULT_SCHEMA pyarrow Table
+        if gpu_profile is not None:
+            # stage-level scheduling: the mapInPandas stage runs under
+            # the GPU profile (submitted through the RDD so withResources
+            # can attach it); its Rows become a table once, here.
+            return result_table_from_tuples(
+                df.rdd.withResources(gpu_profile).collect()
+            )
+        # Arrow collect (guide §6 "Arrow for driver transfers"): the
+        # result frame comes back as columnar batches instead of a
+        # million JVM Row -> Python Row conversions.
+        return df.toArrow()
+
+    def _run_collect():
+        if not repack:
+            return _collect(result_df)
+        import pyarrow as pa
+
+        tables = []
         remaining = list(rows)
         while remaining:
             width = max(
@@ -1343,46 +1271,19 @@ def remote_parallel_map(
                 width = min(width, max_parallelism)
             take = max(1, width * WAVES_PER_WIDTH)
             wave, remaining = remaining[:take], remaining[take:]
-            wave_df = _build_result_df(wave, min(len(wave), width))
-            if gpu_profile is not None:
-                # func_gpu + repack: every wave still runs under the
-                # GPU profile — dropping it would schedule more tasks
-                # than devices.
-                out.extend(wave_df.rdd.withResources(gpu_profile).collect())
-            else:
-                out.extend(wave_df.collect())
-        return out
+            # func_gpu + repack: every wave still runs under the GPU
+            # profile — dropping it would schedule more tasks than devices.
+            tables.append(_collect(_build_result_df(wave, min(len(wave), width))))
+        return pa.concat_tables(tables)
 
-    def _run_collect():
-        if repack:
-            return _run_collect_waves()
-        if gpu_profile is not None:
-            # stage-level scheduling: the single mapInPandas stage runs
-            # under the GPU profile (the job is submitted through the
-            # RDD so withResources can attach the profile).
-            return result_df.rdd.withResources(gpu_profile).collect()
-        # Arrow collect (guide §6 "Arrow for driver transfers"): the
-        # result frame comes back as columnar batches instead of a
-        # million JVM Row -> Python Row conversions; downstream
-        # materialization is vectorized (materialize_results_arrow).
-        return result_df.toArrow()
-
-    def collect_rows():
-        import contextlib as _ctx
-
-        with log_server if log_server is not None else _ctx.nullcontext():
+    def collect_table():
+        with log_server if log_server is not None else contextlib.nullcontext():
             if spinner:
                 from burla_spark.progress import ProgressReporter
 
                 with ProgressReporter(spark):
                     return _run_collect()
             return _run_collect()
-
-    def collect_all():
-        out = collect_rows()
-        if isinstance(out, list):  # repack / GPU paths still collect rows
-            return [handle(row) for row in out]
-        return materialize_results_arrow(out, _deliver=deliver)
 
     if detach:
         # Journal the detached job (reference job_watcher.py:259,294-301
@@ -1441,7 +1342,7 @@ def remote_parallel_map(
 
             threading.Thread(target=beat, daemon=True, name=f"{job_id}-beat").start()
             try:
-                rows_out = collect_rows()
+                tbl = collect_table()
             except BaseException as exc:
                 stop_beat.set()
                 try:
@@ -1456,34 +1357,23 @@ def remote_parallel_map(
                     pass
                 raise
             stop_beat.set()
-            if isinstance(rows_out, list):  # repack/GPU row path
-                all_rows = list(rows_out) + done_tuples
-            else:  # pyarrow Table from the Arrow collect
-                all_rows = rows_out
-                if done_tuples:
-                    import pyarrow as pa
+            if done_tuples:
+                import pyarrow as pa
 
-                    all_rows = pa.concat_tables(
-                        [rows_out, result_table_from_tuples(
-                            done_tuples, schema=rows_out.schema
-                        )]
-                    )
+                tbl = pa.concat_tables(
+                    [tbl, result_table_from_tuples(done_tuples, schema=tbl.schema)]
+                )
             try:
                 # error rows journal too — fetch_results re-raises them
                 # with the same fidelity a live call would have.
-                jobs.journal_finish(spark, job_id, all_rows, RESULT_SCHEMA, jdir)
+                jobs.journal_finish(spark, job_id, tbl, jdir)
             except Exception:  # noqa: BLE001
                 pass
-            if isinstance(all_rows, list):
-                return [
-                    handle(row if not isinstance(row, tuple) else _ResultRow(row))
-                    for row in all_rows
-                ]
-            return materialize_results_arrow(all_rows, _deliver=deliver)
+            return materialize_results_arrow(tbl, deliver)
 
         bg = jobs.submit(spark, journaled_action, tag=job_id)
         bg.job_id = job_id
         handle_box.append(bg)
         return bg
 
-    return collect_all()
+    return materialize_results_arrow(collect_table(), deliver)

@@ -22,9 +22,7 @@ from burla_spark.logs import (
     MessageStreamClient,
     MessageStreamServer,
     decode_log_frame,
-    decode_result_row,
     encode_log_frame,
-    encode_result_row,
     once_per_index,
 )
 
@@ -34,18 +32,6 @@ HOST = "127.0.0.1"
 # ---------------------------------------------------------------------------
 # frame codecs: struct round-trips, no pickle on the wire
 # ---------------------------------------------------------------------------
-@pytest.mark.parametrize(
-    "row",
-    [
-        (0, False, b"\x80payload", "", None, None, None, None),
-        (41, True, None, "caught: déjà vu\n", "ValueError", "bad", "tb…", b"\x00\x01"),
-        (2**40, False, b"", None, None, None, None, None),
-    ],
-)
-def test_result_row_codec_roundtrip(row):
-    assert decode_result_row(encode_result_row(row)) == row
-
-
 def test_result_batch_codec_roundtrip():
     """Columnar batch frame (one packed array per column, mode byte 0
     for an all-None column): every null/empty/unicode/binary shape must
@@ -56,6 +42,7 @@ def test_result_batch_codec_roundtrip():
     varied = [
         (0, False, b"abc", "", None, None, None, None),
         (1, True, None, "out\n", "ValueError", "boom", "tb…", b"\x00pkl"),
+        (41, True, None, "caught: déjà vu\n", "ValueError", "bad", "tb…", b"\x00\x01"),
         (2, False, b"", "", "", None, "x", None),
         (3, False, b"\x00\xff", "unicode é", None, "", None, b""),
         (2**40, False, b"big-idx", None, None, None, None, None),

@@ -45,6 +45,23 @@ def test_custom_exception_state_roundtrips(spark):
     assert e.burla_input_index == 0
 
 
+@pytest.mark.parametrize("generator", [False, True])
+def test_unpicklable_result_is_error_of_its_input(spark, generator):
+    # the result pickle runs inside the per-input try: a result that
+    # cannot be pickled fails ITS input, with the other rows intact
+    import threading
+
+    def fn(x):
+        return threading.Lock() if x == 2 else x
+
+    with pytest.raises(RpmError) as exc_info:
+        out = remote_parallel_map(fn, range(4), spark=spark, generator=generator)
+        list(out)
+    err = exc_info.value
+    assert isinstance(err, TypeError)
+    assert err.burla_input_index == 2
+
+
 def test_unpicklable_error_falls_back_to_rpmerror():
     exc = _rehydrate_error(None, "WeirdError", "msg", "tb text", 4)
     assert type(exc) is RpmError
