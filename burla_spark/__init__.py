@@ -5,7 +5,7 @@ A from-scratch re-expression of the capabilities of Burla-Cloud/burla
 
 * ``remote_parallel_map`` — the reference's single public operator
   (``client/src/burla/_remote_parallel_map.py:457``) re-built on
-  ``mapInPandas`` (see :mod:`burla_spark.rpm`).
+  ``mapInArrow`` (see :mod:`burla_spark.rpm`).
 * A first-class relational operator surface (scan/filter/join/agg/
   window/sort/set-ops) — the queries the reference's documented examples
   run inside user UDFs (``README.md:123-153``), expressed declaratively

@@ -222,32 +222,39 @@ def _partial_dir(base: str, job_id: str) -> str:
     return os.path.join(base, job_id, "partial")
 
 
-def read_partial_results(base: str, job_id: str) -> dict[int, tuple]:
+def read_partial_results(base: str, job_id: str):
     """Per-input results journaled by executors WHILE the job ran —
     the ack half of the reference's ack/replay contract
-    (client/src/burla/_node.py:463-524): each task appends its
-    completed (idx, result) rows before the driver ever collects, so a
+    (client/src/burla/_node.py:463-524): each task writes its RESULT
+    batch as an Arrow IPC file before the driver ever collects, so a
     redrive after driver death resumes from the delivered set instead
-    of restarting. Returns {idx: RESULT_SCHEMA tuple}; duplicate
-    indices (task retries / speculation) dedupe first-wins, same rule
-    as the live log channel."""
-    import pickle as _pickle
+    of restarting. Returns a RESULT table (``rpm.result_schema()``),
+    sorted by idx. Files are read in name order; a torn file is
+    skipped, and duplicate indices (task retries / speculation)
+    keep the first row — the same rule as the live log channel.
+    Reading an ack runs no code-executing deserializer: executors write
+    these files into shared storage."""
+    import numpy as np
+    import pyarrow as pa
+
+    from burla_spark.rpm import result_schema
 
     pdir = _partial_dir(base, job_id)
-    done: dict[int, tuple] = {}
-    if not os.path.isdir(pdir):
-        return done
-    for name in sorted(os.listdir(pdir)):
-        if not name.endswith(".pkl"):
+    names = sorted(os.listdir(pdir)) if os.path.isdir(pdir) else []
+    tables = [result_schema().empty_table()]
+    for name in names:
+        if not name.endswith(".arrow"):
             continue
         try:
-            with open(os.path.join(pdir, name), "rb") as fh:
-                rows = _pickle.load(fh)
-        except Exception:  # noqa: BLE001 — torn write: skip the file
+            with pa.OSFile(os.path.join(pdir, name)) as fh:
+                tbl = pa.ipc.open_file(fh).read_all()
+        except (OSError, pa.ArrowInvalid):  # torn write: skip the file
             continue
-        for tup in rows:
-            done.setdefault(int(tup[0]), tuple(tup))
-    return done
+        tables.append(tbl)
+    acks = pa.concat_tables(tables)
+    # np.unique's return_index is each idx's FIRST occurrence
+    _, first = np.unique(acks.column("idx").to_numpy(), return_index=True)
+    return acks.take(first)
 
 
 def _claim_redrive(base: str, job_id: str, stale_s: float) -> None:
@@ -408,13 +415,13 @@ def redrive(
         cp = _cloudpickle()
         func = cp.loads(payload["function_pkl"])
         done = read_partial_results(base, job_id)
+        acked = set(done.column("idx").to_pylist())
         todo = [
-            (idx, blob) for (idx, blob) in sorted(payload["inputs"]) if idx not in done
+            (idx, blob) for (idx, blob) in sorted(payload["inputs"]) if idx not in acked
         ]
         return remote_parallel_map(
             func, [], spark=spark, detach=True, _job_id=job_id,
-            journal_dir=journal_dir, _raw_input_rows=todo,
-            _done_rows=[done[i] for i in sorted(done)],
+            journal_dir=journal_dir, _raw_input_rows=todo, _done_table=done,
         )
     except BaseException:
         # release the claim so a retry (same process or another) is not
@@ -473,7 +480,7 @@ def _last_heartbeat_at(base: str, job_id: str, manifest: dict) -> float:
 
 def _cleanup_run_artifacts(base: str, job_id: str) -> None:
     """Remove run-scoped artifacts once a job reaches a terminal state:
-    the partial/ ack files (a second pickled copy of every result —
+    the partial/ ack files (a second copy of every result —
     only useful while status=running), redrive claims, the heartbeat
     sidecar, and any cancel flag. Without this every detached job
     permanently doubled its journal footprint. Best-effort."""
@@ -499,7 +506,7 @@ def _cleanup_run_artifacts(base: str, job_id: str) -> None:
 def journal_finish(
     spark: SparkSession, job_id: str, tbl, journal_dir: str | None = None,
 ) -> None:
-    """Write the job's RESULT_SCHEMA pyarrow Table as parquet, then
+    """Write the job's RESULT pyarrow Table as parquet, then
     flip the manifest to done — order matters: a 'done' manifest
     guarantees the results table is complete.
 

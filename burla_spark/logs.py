@@ -96,7 +96,7 @@ def decode_log_frame(frame: bytes) -> tuple[int, str]:
 
 
 # result rows: (idx, is_error, payload, stdout, error_type, error_msg,
-# error_tb, error_pkl) — matches rpm.RESULT_SCHEMA. Optional fields are
+# error_tb, error_pkl) — matches rpm.result_schema(). Optional fields are
 # length-prefixed with -1 meaning NULL; text fields are utf-8.
 _ROW_TEXT_FIELDS = (False, True, True, True, True, False)  # after idx/is_error
 

@@ -22,8 +22,9 @@ Semantics preserved (reference cites in parens):
 Spark replaces the reference's entire transport/scheduling machinery
 (scatter, queues, work stealing, ack/replay, heartbeats — §2
 A5-A10/A15/A21) with the DataFrame runtime: inputs become a binary
-DataFrame, the function runs under ``mapInPandas`` (Arrow-batched), and
-Spark's deterministic task retry provides the exactly-once contract.
+DataFrame, the function runs under ``mapInArrow`` (one RESULT record
+batch out per Arrow input batch), and Spark's deterministic task retry
+provides the exactly-once contract.
 At scale the input DataFrame partitions over the cluster exactly like
 any other table — a million inputs is a small DataFrame.
 """
@@ -31,6 +32,7 @@ any other table — a million inputs is a small DataFrame.
 from __future__ import annotations
 
 import contextlib
+import functools
 import io
 import os
 import pickle
@@ -42,18 +44,31 @@ from contextlib import redirect_stdout
 from typing import Any
 
 from pyspark.sql import SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 
 MAX_FUNCTION_SIZE_BYTES = 100_000_000  # 0.1 GB, reference _remote_parallel_map.py:222
 MAX_INPUT_SIZE_BYTES = 200_000_000  # 200 MB, reference _node.py:25
 
-RESULT_SCHEMA = (
-    "idx long, is_error boolean, payload binary, stdout string, "
-    "error_type string, error_msg string, error_tb string, error_pkl binary"
-)
 RESULT_COLUMNS = (
     "idx", "is_error", "payload", "stdout",
     "error_type", "error_msg", "error_tb", "error_pkl",
 )
+
+
+@functools.cache
+def result_schema():
+    """The pyarrow schema of a RESULT batch, in RESULT_COLUMNS order —
+    the one shape the worker emits and collect, the GPU path, detach
+    acks and redrive read. Built on first call so ``import burla_spark``
+    stays free of pyarrow (the detach submitter never touches Arrow)."""
+    import pyarrow as pa
+
+    types = (
+        pa.int64(), pa.bool_(), pa.binary(), pa.string(),
+        pa.string(), pa.string(), pa.string(), pa.binary(),
+    )
+    return pa.schema(list(zip(RESULT_COLUMNS, types)))
+
 
 # Types whose plain-pickle form is environment-independent (no module
 # references that could be missing on the other side of the boundary,
@@ -218,8 +233,8 @@ def _user_module_by_value(cp, function_: Callable):
 
 
 def _error_fields(pickler, exc: Exception) -> tuple:
-    """(error_type, error_msg, error_tb, error_pkl) of a RESULT_SCHEMA
-    row; call inside the ``except`` that caught ``exc``.
+    """(error_type, error_msg, error_tb, error_pkl) of a RESULT row;
+    call inside the ``except`` that caught ``exc``.
 
     ``error_pkl`` ships (class, args, state) — NOT the exception object:
     pickling an exception replays ``cls(*args)`` on load, which explodes
@@ -243,8 +258,8 @@ def _make_udf(
     partial_dir: str | None = None,
     result_addr: tuple[str, int, bytes] | None = None,
 ):
-    """Build the mapInPandas worker: unpickle once per task, run each
-    input, emit (idx, is_error, payload, stdout, error fields).
+    """Build the mapInArrow worker: unpickle once per task, run each
+    input, emit one RESULT batch (:func:`result_schema`) per input batch.
 
     With ``log_addr``, each input's stdout is pushed LIVE to the
     driver's log listener the moment the input finishes (reference
@@ -253,8 +268,8 @@ def _make_udf(
     exactly-once, and any push failure falls back to with-result
     delivery.
 
-    With ``partial_dir`` (detached jobs), each batch's completed rows
-    are ALSO appended to the job's journal as a uniquely-named pickle
+    With ``partial_dir`` (detached jobs), each RESULT batch is ALSO
+    written to the job's journal as a uniquely-named Arrow IPC file
     before being yielded — the ack half of the reference's ack/replay
     contract (_node.py:463-524): if the driver dies mid-job, a redrive
     resumes from the acked set instead of recomputing it. Task retries
@@ -263,10 +278,10 @@ def _make_udf(
     never a failed task. On a real cluster the journal dir must be
     shared storage (documented in jobs.py)."""
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
+    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:  # noqa: F821
         import os as _os
 
-        import pandas as pd
+        import pyarrow as pa
 
         # mark this python worker so a NESTED remote_parallel_map call
         # (user function calling rpm again) degrades to the
@@ -319,9 +334,10 @@ def _make_udf(
             fn = pickle.loads(function_pkl)
             for batch in batches:
                 out: dict[str, list] = {name: [] for name in RESULT_COLUMNS}
-                for idx, blob in zip(batch["idx"], batch["payload"]):
-                    idx = int(idx)
-                    arg = pickle.loads(bytes(blob))
+                for idx, blob in zip(
+                    batch.column(0).to_pylist(), batch.column(1).to_pylist()
+                ):
+                    arg = pickle.loads(blob)
                     buf = io.StringIO()
                     # the result pickle runs inside the try: a result
                     # that cannot be pickled is an error of ITS input
@@ -348,38 +364,6 @@ def _make_udf(
                     out["error_msg"].append(error_msg)
                     out["error_tb"].append(error_tb)
                     out["error_pkl"].append(error_pkl)
-                if partial_dir is not None and out["idx"]:
-                    try:
-                        import json as _json
-                        import uuid as _uuid
-
-                        # a task of a canceled/failed job may finish a batch
-                        # AFTER the terminal cleanup removed partial/ — skip
-                        # the ack once the manifest left 'running' so late
-                        # writes don't recreate permanent journal litter.
-                        still_running = True
-                        manifest = _os.path.join(
-                            _os.path.dirname(partial_dir), "manifest.json"
-                        )
-                        try:
-                            with open(manifest) as _fh:
-                                still_running = (
-                                    _json.load(_fh).get("status") == "running"
-                                )
-                        except (OSError, ValueError):
-                            pass  # unreadable/missing manifest: ack anyway
-                        if not still_running:
-                            raise _SkipAck()
-                        _os.makedirs(partial_dir, exist_ok=True)
-                        rows_pkl = pickle.dumps(list(zip(*out.values())))
-                        path = _os.path.join(
-                            partial_dir, f"part-{_uuid.uuid4().hex}.pkl"
-                        )
-                        with open(path + ".tmp", "wb") as fh:
-                            fh.write(rows_pkl)
-                        _os.replace(path + ".tmp", path)  # readers never see torn acks
-                    except Exception:  # noqa: BLE001 — ack log is best-effort
-                        pass
                 if res_client is not None:
                     # push this batch's rows now (completion-order
                     # latency: a finished batch is on the wire before
@@ -409,10 +393,42 @@ def _make_udf(
                             "result-stream push to driver failed; "
                             "task will retry"
                         )
-                    # rows delivered over the socket — emit no frame
+                    # rows delivered over the socket — emit no batch
                     # (the JVM side of this stage only drains empties).
                     continue
-                yield pd.DataFrame(out)
+                rb = pa.RecordBatch.from_pydict(out, schema=result_schema())
+                if partial_dir is not None and rb.num_rows:
+                    try:
+                        import json as _json
+                        import uuid as _uuid
+
+                        # a task of a canceled/failed job may finish a batch
+                        # AFTER the terminal cleanup removed partial/ — skip
+                        # the ack once the manifest left 'running' so late
+                        # writes don't recreate permanent journal litter.
+                        still_running = True
+                        manifest = _os.path.join(
+                            _os.path.dirname(partial_dir), "manifest.json"
+                        )
+                        try:
+                            with open(manifest) as _fh:
+                                still_running = (
+                                    _json.load(_fh).get("status") == "running"
+                                )
+                        except (OSError, ValueError):
+                            pass  # unreadable/missing manifest: ack anyway
+                        if not still_running:
+                            raise _SkipAck()
+                        _os.makedirs(partial_dir, exist_ok=True)
+                        path = _os.path.join(
+                            partial_dir, f"part-{_uuid.uuid4().hex}.arrow"
+                        )
+                        with pa.ipc.new_file(path + ".tmp", rb.schema) as writer:
+                            writer.write_batch(rb)
+                        _os.replace(path + ".tmp", path)  # readers never see torn acks
+                    except Exception:  # noqa: BLE001 — ack log is best-effort
+                        pass
+                yield rb
         finally:
             # close the push sockets even on a mid-batch error: python
             # workers are REUSED across tasks, so an unclosed socket
@@ -489,8 +505,8 @@ def gpu_resource_profile(func_gpu: int, func_cpu: int = 1):
     + func_cpu cores per input; executor side requests enough device
     slots with the standard nvidia discovery script. Building the
     profile needs no GPUs (it's metadata until applied), so this is
-    unit-testable anywhere; applying it happens via
-    ``rdd.withResources`` on a cluster that advertises
+    unit-testable anywhere; it is applied to the map stage through
+    ``mapInArrow(profile=...)`` on a cluster that advertises
     spark.executor.resource.gpu.amount."""
     import math
 
@@ -703,36 +719,9 @@ def _ram_parallelism_cap(spark: SparkSession, func_ram) -> int:
         return 1 << 30
 
 
-def result_table_from_tuples(tuples, schema=None):
-    """Build a pyarrow Table in RESULT_SCHEMA column order from raw
-    result tuples/Rows (columnar construction — no per-row Spark
-    conversion)."""
-    import pyarrow as pa
-
-    cols = list(zip(*tuples)) if tuples else [[] for _ in RESULT_COLUMNS]
-    if schema is None:
-        schema = pa.schema(
-            [
-                ("idx", pa.int64()),
-                ("is_error", pa.bool_()),
-                ("payload", pa.binary()),
-                ("stdout", pa.string()),
-                ("error_type", pa.string()),
-                ("error_msg", pa.string()),
-                ("error_tb", pa.string()),
-                ("error_pkl", pa.binary()),
-            ]
-        )
-    arrays = [
-        pa.array(list(col), type=schema.field(name).type)
-        for col, name in zip(cols, RESULT_COLUMNS)
-    ]
-    return pa.Table.from_arrays(arrays, schema=schema)
-
-
 def _result_value(row, deliver):
-    """One RESULT_SCHEMA row (any 8-tuple in RESULT_COLUMNS order; a
-    Spark Row is a tuple) to its user-facing value: deliver its stdout,
+    """One RESULT row (any 8-tuple in RESULT_COLUMNS order; a Spark
+    Row is a tuple) to its user-facing value: deliver its stdout,
     re-raise its error with original-type fidelity, or unpickle its
     payload."""
     idx, is_error, payload, stdout, error_type, error_msg, error_tb, error_pkl = row
@@ -744,7 +733,7 @@ def _result_value(row, deliver):
 
 
 def materialize_results_arrow(tbl, deliver) -> list:
-    """Turn a RESULT_SCHEMA pyarrow Table into the user-facing result
+    """Turn a RESULT pyarrow Table into the user-facing result
     list. Every non-streaming mode (collect, repack waves, GPU, detach)
     and the journal fetch end here. ``deliver(idx, text)`` receives the
     stdout rows carry; callers pass a ``logs.once_per_index`` sink so
@@ -963,9 +952,9 @@ def remote_parallel_map(
     _job_id: str | None = None,  # internal: jobs.redrive resubmits under the orphan's id
     journal_dir: str | None = None,
     # internal, jobs.redrive resume: pre-pickled (orig_idx, blob) inputs
-    # still to run, and already-acked RESULT_SCHEMA tuples to merge.
+    # still to run, and the already-acked RESULT table to merge.
     _raw_input_rows: list | None = None,
-    _done_rows: list | None = None,
+    _done_table=None,
 ):
     """Apply ``function_`` to every input on the cluster; return results
     (unordered list; a generator when ``generator=True``; a
@@ -1048,7 +1037,7 @@ def remote_parallel_map(
                 "set spark.executor.resource.gpu.amount / "
                 "spark.task.resource.gpu.amount (or use dynamic "
                 "allocation) and the attached .resource_profile is "
-                "applied via rdd.withResources()."
+                "applied to the map stage via mapInArrow(profile=...)."
             )
             err.resource_profile = profile
             raise err
@@ -1154,10 +1143,6 @@ def remote_parallel_map(
         except Exception:  # noqa: BLE001 — live logs are best-effort
             log_server = None
 
-    # pandas + Arrow ships the input batch to the JVM ~35% faster than
-    # the row-list path (one Arrow buffer vs per-row pickling).
-    import pandas as pd
-
     def _build_result_df(rows_slice, parts, result_addr=None):
         # createDataFrame over a pyarrow Table makes ONE partition per
         # Arrow batch, and the batch size is the session's
@@ -1185,6 +1170,8 @@ def remote_parallel_map(
         )
         key = "spark.sql.execution.arrow.maxRecordsPerBatch"
         if oversized:
+            import pandas as pd
+
             wave_pdf = pd.DataFrame(
                 {
                     "idx": [r[0] for r in rows_slice],
@@ -1210,7 +1197,9 @@ def remote_parallel_map(
                 wave_df = spark.createDataFrame(tbl, "idx long, payload binary")
             finally:
                 spark.conf.set(key, prev)
-        return wave_df.mapInPandas(
+        # func_gpu: stage-level scheduling — the map stage itself runs
+        # under the GPU profile, in every mode that collects.
+        return wave_df.mapInArrow(
             _make_udf(
                 function_pkl,
                 capture_stdout,
@@ -1218,7 +1207,8 @@ def remote_parallel_map(
                 partial_dir=partial_path,
                 result_addr=result_addr,
             ),
-            RESULT_SCHEMA,
+            from_arrow_schema(result_schema()),
+            profile=gpu_profile,
         )
 
     # repack ships inputs per wave — building (and eagerly Arrow-
@@ -1242,23 +1232,12 @@ def remote_parallel_map(
     # RAM-pressure change takes effect within a couple of waves.
     WAVES_PER_WIDTH = 4
 
-    def _collect(df):
-        # every non-streaming mode collects a RESULT_SCHEMA pyarrow Table
-        if gpu_profile is not None:
-            # stage-level scheduling: the mapInPandas stage runs under
-            # the GPU profile (submitted through the RDD so withResources
-            # can attach it); its Rows become a table once, here.
-            return result_table_from_tuples(
-                df.rdd.withResources(gpu_profile).collect()
-            )
-        # Arrow collect (guide §6 "Arrow for driver transfers"): the
-        # result frame comes back as columnar batches instead of a
-        # million JVM Row -> Python Row conversions.
-        return df.toArrow()
-
+    # Every non-streaming mode collects a RESULT pyarrow Table with
+    # toArrow (guide §6 "Arrow for driver transfers"): the worker's
+    # batches come back columnar, with no JVM Row -> Python Row step.
     def _run_collect():
         if not repack:
-            return _collect(result_df)
+            return result_df.toArrow()
         import pyarrow as pa
 
         tables = []
@@ -1273,7 +1252,7 @@ def remote_parallel_map(
             wave, remaining = remaining[:take], remaining[take:]
             # func_gpu + repack: every wave still runs under the GPU
             # profile — dropping it would schedule more tasks than devices.
-            tables.append(_collect(_build_result_df(wave, min(len(wave), width))))
+            tables.append(_build_result_df(wave, min(len(wave), width)).toArrow())
         return pa.concat_tables(tables)
 
     def collect_table():
@@ -1297,7 +1276,7 @@ def remote_parallel_map(
         job_id = _detach_job_id
         # already-acked rows from a previous run of this job id — merged
         # into the journal and the returned results, never recomputed.
-        done_tuples = [tuple(t) for t in (_done_rows or [])]
+        n_done = _done_table.num_rows if _done_table is not None else 0
         try:
             # payload first (function + inputs, size-capped) so the
             # manifest's redrivable flag is truthful from the start —
@@ -1315,7 +1294,7 @@ def remote_parallel_map(
                     spark, job_id, function_pkl, rows, jdir
                 )
             jobs.journal_start(
-                spark, job_id, len(rows) + len(done_tuples), jdir,
+                spark, job_id, len(rows) + n_done, jdir,
                 redrivable=redrivable,
             )
         except Exception:  # noqa: BLE001
@@ -1357,12 +1336,10 @@ def remote_parallel_map(
                     pass
                 raise
             stop_beat.set()
-            if done_tuples:
+            if n_done:
                 import pyarrow as pa
 
-                tbl = pa.concat_tables(
-                    [tbl, result_table_from_tuples(done_tuples, schema=tbl.schema)]
-                )
+                tbl = pa.concat_tables([tbl, _done_table])
             try:
                 # error rows journal too — fetch_results re-raises them
                 # with the same fidelity a live call would have.

@@ -415,14 +415,18 @@ def test_redrive_refuses_completed_job(spark, journal_dir):
 # (reference ack/replay keeps completed inputs across client loss,
 # client/src/burla/_node.py:463-524) — plus the heartbeat/claim races.
 # ---------------------------------------------------------------------------
-def _manufacture_orphan(spark, journal_dir, job_id, func, items, done=None):
+def _manufacture_orphan(
+    spark, journal_dir, job_id, func, items, done=None, acks=None, torn=()
+):
     """Journal state exactly as a dead driver would have left it:
-    payload + running manifest with an hours-stale heartbeat, plus an
-    optional partial/ ack file for already-completed inputs."""
-    import pickle
-    import time
+    payload + running manifest with an hours-stale heartbeat, plus
+    optional partial/ Arrow IPC acks for already-completed inputs —
+    ``done`` ({idx: value}) as one file, ``acks`` as {file name:
+    {idx: value}}. Each file named in ``torn`` is cut mid-file, as a
+    crash during a write to shared storage leaves it."""
+    import pyarrow as pa
 
-    from burla_spark.rpm import _cloudpickle
+    from burla_spark.rpm import _cloudpickle, result_schema
 
     cp = _cloudpickle()
     rows = [(i, cp.dumps(x)) for i, x in enumerate(items)]
@@ -434,22 +438,35 @@ def _manufacture_orphan(spark, journal_dir, job_id, func, items, done=None):
     doc["heartbeat_at"] = doc["started_at"] = doc["heartbeat_at"] - 3600
     with open(path, "w") as fh:
         json.dump(doc, fh)
+    acks = dict(acks or {})
     if done:
-        pdir = os.path.join(journal_dir, job_id, "partial")
+        acks["part-manufactured.arrow"] = done
+    pdir = os.path.join(journal_dir, job_id, "partial")
+    for name, vals in acks.items():
         os.makedirs(pdir, exist_ok=True)
-        tuples = [
-            (idx, False, cp.dumps(val), "", None, None, None, None)
-            for idx, val in done.items()
-        ]
-        with open(os.path.join(pdir, "part-manufactured.pkl"), "wb") as fh:
-            pickle.dump(tuples, fh)
+        n = len(vals)
+        rb = pa.RecordBatch.from_pydict(
+            {
+                "idx": list(vals), "is_error": [False] * n,
+                "payload": [cp.dumps(v) for v in vals.values()],
+                "stdout": [""] * n, "error_type": [None] * n,
+                "error_msg": [None] * n, "error_tb": [None] * n,
+                "error_pkl": [None] * n,
+            },
+            schema=result_schema(),
+        )
+        path = os.path.join(pdir, name)
+        with pa.ipc.new_file(path, rb.schema) as writer:
+            writer.write_batch(rb)
+        if name in torn:
+            os.truncate(path, os.path.getsize(path) // 2)
 
 
 def test_detached_job_acks_partials(spark, journal_dir):
     """Executors append per-input results to partial/ WHILE the job
     runs — the ack log a redrive resumes from — and the acks are
     cleaned up once the job reaches a terminal state (they are a
-    second pickled copy of every result, useful only mid-run)."""
+    second copy of every result, useful only mid-run)."""
     import pickle
     import time
 
@@ -461,20 +478,21 @@ def test_detached_job_acks_partials(spark, journal_dir):
     job = remote_parallel_map(fn, range(12), spark=spark, detach=True)
     # fast inputs' acks must appear while the straggler still runs
     deadline = time.time() + 5.5
-    seen: dict = {}
-    while time.time() < deadline and len(seen) < 8:
-        seen = jobs.read_partial_results(journal_dir, job.job_id)
+    seen = jobs.read_partial_results(journal_dir, job.job_id)
+    while time.time() < deadline and seen.num_rows < 8:
         time.sleep(0.2)
-    assert len(seen) >= 8 and not job.done, (
-        f"only {len(seen)} acks before completion"
+        seen = jobs.read_partial_results(journal_dir, job.job_id)
+    assert seen.num_rows >= 8 and not job.done, (
+        f"only {seen.num_rows} acks before completion"
     )
     # check any acked input (a FIXED index can share a batch with the
     # straggler under unlucky hash partitioning and ack late — flaky)
-    k = min(k for k in seen if k != 11)
-    assert pickle.loads(seen[k][2]) == k + 1
+    acked = dict(zip(seen.column("idx").to_pylist(), seen.column("payload").to_pylist()))
+    k = min(k for k in acked if k != 11)
+    assert pickle.loads(acked[k]) == k + 1
     assert sorted(job.result(timeout=120)) == list(range(1, 13))
     # terminal state: ack files cleaned, results served from parquet
-    assert jobs.read_partial_results(journal_dir, job.job_id) == {}
+    assert jobs.read_partial_results(journal_dir, job.job_id).num_rows == 0
     assert not os.path.isdir(os.path.join(journal_dir, job.job_id, "partial"))
     assert sorted(jobs.fetch_results(spark, job.job_id)) == list(range(1, 13))
 
@@ -525,6 +543,58 @@ def test_redrive_with_all_inputs_acked_skips_compute(spark, journal_dir, tmp_pat
     assert sorted(bg.result(timeout=120)) == [0, 1, 2]
     assert os.listdir(exec_dir) == []  # nothing recomputed
     assert sorted(jobs.fetch_results(spark, "burla-job-allacked")) == [0, 1, 2]
+
+
+def test_redrive_recomputes_inputs_of_a_torn_ack(spark, journal_dir, tmp_path):
+    """Lost partial acks → restart-style redrive: a truncated ack file
+    is skipped, and redrive recomputes exactly the inputs it held."""
+    execs = tmp_path / "execs_torn"
+    execs.mkdir()
+    exec_dir = str(execs)
+
+    def fn(x):
+        with open(os.path.join(exec_dir, f"exec_{x}"), "a") as fh:
+            fh.write("ran\n")
+        return x * 11
+
+    _manufacture_orphan(
+        spark, journal_dir, "burla-job-tornack", fn, list(range(5)),
+        acks={"part-a.arrow": {0: 0, 1: 11}, "part-b.arrow": {2: 22, 3: 33}},
+        torn={"part-b.arrow"},
+    )
+    done = jobs.read_partial_results(journal_dir, "burla-job-tornack")
+    assert done.column("idx").to_pylist() == [0, 1]
+    bg = jobs.redrive(spark, "burla-job-tornack")
+    assert sorted(bg.result(timeout=120)) == [x * 11 for x in range(5)]
+    assert sorted(os.listdir(exec_dir)) == ["exec_2", "exec_3", "exec_4"]
+
+
+def test_duplicate_ack_keeps_first_file_by_name(spark, journal_dir, tmp_path):
+    """An idx acked twice (task retry / speculation) keeps the row of
+    the first ack file by name, and redrive neither recomputes it nor
+    returns it twice."""
+    import pickle
+
+    execs = tmp_path / "execs_dup"
+    execs.mkdir()
+    exec_dir = str(execs)
+
+    def fn(x):
+        with open(os.path.join(exec_dir, f"exec_{x}"), "a") as fh:
+            fh.write("ran\n")
+        return x * 11
+
+    _manufacture_orphan(
+        spark, journal_dir, "burla-job-dupack", fn, [0, 1, 2],
+        acks={"part-b.arrow": {1: 999, 2: 22}, "part-a.arrow": {1: 111}},
+    )
+    done = jobs.read_partial_results(journal_dir, "burla-job-dupack")
+    assert done.column("idx").to_pylist() == [1, 2]
+    assert [pickle.loads(p) for p in done.column("payload").to_pylist()] == [111, 22]
+    bg = jobs.redrive(spark, "burla-job-dupack")
+    assert sorted(bg.result(timeout=120)) == [0, 22, 111]
+    assert os.listdir(exec_dir) == ["exec_0"]
+    assert sorted(jobs.fetch_results(spark, "burla-job-dupack")) == [0, 22, 111]
 
 
 def test_heartbeat_never_unfinishes_manifest(spark, journal_dir):

@@ -16,6 +16,7 @@ this process.
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
@@ -217,14 +218,14 @@ def _fn13(x):
     return x * 13
 
 job = remote_parallel_map(_fn13, range(12), spark=spark, detach=True)
-seen = {}
 deadline = _t.time() + 5.5
-while _t.time() < deadline and len(seen) < 6:
-    seen = read_partial_results(%(journal)r, job.job_id)
+seen = read_partial_results(%(journal)r, job.job_id)
+while _t.time() < deadline and seen.num_rows < 6:
     _t.sleep(0.2)
-assert len(seen) >= 6, "executor acks before completion: %%d" %% len(seen)
+    seen = read_partial_results(%(journal)r, job.job_id)
+assert seen.num_rows >= 6, "executor acks before completion: %%d" %% seen.num_rows
 assert sorted(job.result(timeout=180)) == [x * 13 for x in range(12)]
-assert read_partial_results(%(journal)r, job.job_id) == {}, "acks not cleaned"
+assert read_partial_results(%(journal)r, job.job_id).num_rows == 0, "acks not cleaned"
 print("PARTIAL_ACKS_OK")
 print("DETACH_JOB_ID=" + job.job_id)
 
@@ -266,7 +267,8 @@ def _cluster_run(sf_dir, tmp_path_factory):
     tests below assert their own phase markers so a failure localizes."""
     if not _RESULT:
         journal = str(tmp_path_factory.mktemp("mx_journal"))
-        script = _SCRIPT % {"repo": "/root/repo", "sf": sf_dir, "journal": journal}
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        script = _SCRIPT % {"repo": repo, "sf": sf_dir, "journal": journal}
         proc = subprocess.run(
             [sys.executable, "-c", script],
             capture_output=True,

@@ -148,6 +148,24 @@ def test_gpu_resource_profile_builds_without_gpus():
     assert p2.executorResources["gpu"].amount == 1
 
 
+def test_func_gpu_profile_reaches_the_map_stage(spark, monkeypatch):
+    """On a cluster that advertises GPUs, the map stage itself carries
+    the GPU profile. The plan is recorded, never run: no GPUs here."""
+    from burla_spark import rpm
+
+    plans = []
+
+    def record_plan(df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return rpm.result_schema().empty_table()
+
+    monkeypatch.setattr(rpm, "_cluster_has_gpus", lambda spark: True)
+    monkeypatch.setattr(type(spark.range(1)), "toArrow", record_plan)
+    assert remote_parallel_map(lambda x: x, [1, 2], spark=spark, func_gpu=1) == []
+    assert len(plans) == 1
+    assert "Profile:" in plans[0] and "gpu" in plans[0], plans[0]
+
+
 def test_func_gpu_generator_conflict(spark):
     with pytest.raises(ValueError, match="generator"):
         remote_parallel_map(
