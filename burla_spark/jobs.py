@@ -28,6 +28,7 @@ acks; the driver writes ``results.parquet``) and defaults to
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import sys
@@ -257,6 +258,32 @@ def read_partial_results(base: str, job_id: str):
     return acks.take(first)
 
 
+def write_ack(partial_dir: str, rb) -> None:
+    """Executor half of :func:`read_partial_results`: write one RESULT
+    batch into ``partial_dir`` as a uniquely named Arrow IPC file,
+    published by rename so readers never see a torn ack. Skipped once
+    the manifest left 'running': a late batch of a canceled job must
+    not recreate ``partial/`` after the terminal cleanup. Best-effort:
+    an unwritable dir degrades to restart-style redrive, never a
+    failed task."""
+    import pyarrow as pa
+
+    try:
+        with open(os.path.join(os.path.dirname(partial_dir), "manifest.json")) as fh:
+            if json.load(fh).get("status") != "running":
+                return
+    except (OSError, ValueError):
+        pass  # unreadable/missing manifest: ack anyway
+    path = os.path.join(partial_dir, f"part-{uuid.uuid4().hex}.arrow")
+    try:
+        os.makedirs(partial_dir, exist_ok=True)
+        with pa.ipc.new_file(path + ".tmp", rb.schema) as writer:
+            writer.write_batch(rb)
+        os.replace(path + ".tmp", path)
+    except (OSError, pa.ArrowException):
+        pass
+
+
 def _claim_redrive(base: str, job_id: str, stale_s: float) -> None:
     """Atomically claim an orphan before resubmitting: two processes
     redriving concurrently would both pass the staleness check and
@@ -408,20 +435,21 @@ def redrive(
                 pass
         import pickle as _pickle
 
+        from burla_spark import rpm
+
         with open(payload_path, "rb") as fh:
             payload = _pickle.load(fh)
-        from burla_spark.rpm import _cloudpickle, remote_parallel_map
-
-        cp = _cloudpickle()
-        func = cp.loads(payload["function_pkl"])
+        # the journaled bytes go straight to the detach adapter: the
+        # function is never unpickled on this driver, and the inputs
+        # keep their ORIGINAL indices so acks and new results key alike.
         done = read_partial_results(base, job_id)
         acked = set(done.column("idx").to_pylist())
         todo = [
             (idx, blob) for (idx, blob) in sorted(payload["inputs"]) if idx not in acked
         ]
-        return remote_parallel_map(
-            func, [], spark=spark, detach=True, _job_id=job_id,
-            journal_dir=journal_dir, _raw_input_rows=todo, _done_table=done,
+        return rpm.run_detached(
+            rpm._Plan(spark, payload["function_pkl"], todo), journal_dir,
+            job_id=job_id, done=done,
         )
     except BaseException:
         # release the claim so a retry (same process or another) is not
@@ -462,6 +490,104 @@ def journal_heartbeat(spark: SparkSession, job_id: str, journal_dir: str | None 
         os.replace(tmp, path)
     except OSError:
         pass  # journaling is best-effort
+
+
+@contextlib.contextmanager
+def heartbeat(base: str, job_id: str, on_cancel: Callable[[], Any] | None = None):
+    """Beat ``job_id``'s sidecar every HEARTBEAT_INTERVAL_S while the
+    block runs, from one thread joined on exit (two beat threads in
+    one process would write the same ``heartbeat.<pid>.tmp``). Needs
+    no SparkSession, so the process-detach runner beats through its
+    JVM boot. EVERY beat that sees the cross-process cancel flag calls
+    ``on_cancel`` (which must be idempotent): a cancel that lands
+    before the job's Spark job exists interrupts nothing, so the next
+    beat tries again."""
+    stop = threading.Event()
+
+    def beat() -> None:
+        while not stop.wait(HEARTBEAT_INTERVAL_S):
+            journal_heartbeat(None, job_id, base)
+            if on_cancel is not None and cancel_requested(None, job_id, base):
+                on_cancel()
+
+    thread = threading.Thread(target=beat, daemon=True, name=f"{job_id}-beat")
+    thread.start()
+    try:
+        yield
+    finally:
+        stop.set()
+        thread.join()
+
+
+def run_journaled(
+    spark: SparkSession,
+    job_id: str,
+    base: str,
+    function_pkl: bytes,
+    rows: list[tuple[int, bytes]],
+    done,
+    collect: Callable[[], Any],
+    materialize: Callable[[Any], list],
+) -> BackgroundJob:
+    """Run a detached RPM job under the journal, so a SECOND process
+    can list, fetch, cancel or redrive it (reference
+    job_watcher.py:259,294-301): payload and 'running' manifest, then
+    ``collect()`` on a background thread under the job's tag and
+    :func:`heartbeat`, then canceled, error or done. Returns the
+    BackgroundJob (``.job_id`` set) whose result is
+    ``materialize(table)``.
+
+    ``done`` is a redrive's already-acked RESULT table (None for a new
+    job): merged into the results, never recomputed. A redrive keeps
+    the ORIGINAL full payload — with only the remaining inputs in it, a
+    torn ack after a second driver death would drop acked inputs.
+    Journaling is best-effort: an unwritable journal dir degrades to
+    in-process-only detach, never a failed job."""
+    n_done = 0 if done is None else done.num_rows
+    try:
+        # payload first, so the manifest's redrivable flag is truthful
+        # from the start
+        redrivable = done is not None or journal_payload(
+            spark, job_id, function_pkl, rows, base
+        )
+        journal_start(spark, job_id, len(rows) + n_done, base, redrivable=redrivable)
+    except OSError:
+        pass
+    handle: list[BackgroundJob] = []  # filled right after submit
+
+    def cancel() -> None:
+        if handle:
+            handle[0].cancel()
+
+    def action():
+        try:
+            with heartbeat(base, job_id, on_cancel=cancel):
+                tbl = collect()
+        except BaseException as exc:
+            try:
+                if (handle and handle[0]._canceled) or cancel_requested(spark, job_id, base):
+                    journal_cancel(spark, job_id, base)
+                else:
+                    journal_fail(spark, job_id, exc, base)
+            except OSError:
+                pass
+            raise
+        if n_done:
+            import pyarrow as pa
+
+            tbl = pa.concat_tables([tbl, done])
+        try:
+            # error rows journal too — fetch_results re-raises them
+            # with the same fidelity a live call would have.
+            journal_finish(spark, job_id, tbl, base)
+        except OSError:
+            pass
+        return materialize(tbl)
+
+    job = submit(spark, action, tag=job_id)
+    job.job_id = job_id
+    handle.append(job)
+    return job
 
 
 def _last_heartbeat_at(base: str, job_id: str, manifest: dict) -> float:
@@ -537,9 +663,9 @@ def request_cancel(spark: SparkSession, job_id: str, journal_dir: str | None = N
     """Cross-process cancel — the reference's dashboard
     ``POST /v1/jobs/{id}/stop`` (endpoints/jobs.py:93-108): ANY process
     sharing the journal dir can flag a running detached job; the
-    submitting driver's heartbeat thread picks the flag up within one
-    interval and interrupts the job's tag, and the submitter's
-    ``result()`` raises JobCanceled exactly as a live cancel would."""
+    submitting driver's heartbeat interrupts the job's tag at every
+    beat from then on, and the submitter's ``result()`` raises
+    JobCanceled exactly as a live cancel would."""
     base = _journal_dir(spark, journal_dir)
     if not os.path.exists(_manifest_path(base, job_id)):
         raise KeyError(f"no journaled job {job_id!r} under {base}")

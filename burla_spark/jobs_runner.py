@@ -8,10 +8,13 @@ outlive its driver — so a process-detached job gets its OWN driver:
 ``remote_parallel_map(..., detach="process")`` journals the payload
 (function + inputs) and spawns this module in a new session
 (``setsid``); the submitter may exit immediately. The runner re-drives
-the journaled job under a fresh SparkSession and the normal detached
-machinery journals heartbeats, per-input acks, and final results, so
+the journaled job under a fresh SparkSession: ``jobs.redrive`` hands
+the journaled bytes to RPM's detach adapter, and ``jobs.run_journaled``
+journals heartbeats, per-input acks, and final results, so
 ``jobs.list_jobs`` / ``jobs.fetch_results`` / ``jobs.request_cancel``
-work from any later process exactly as for in-process detach.
+work from any later process exactly as for in-process detach. One
+heartbeat mechanism, ``jobs.heartbeat``, beats through the runner's
+JVM boot and then, inside ``run_journaled``, through the job.
 
 Run: ``python -m burla_spark.jobs_runner <journal_dir> <job_id>``
 """
@@ -19,7 +22,6 @@ Run: ``python -m burla_spark.jobs_runner <journal_dir> <job_id>``
 from __future__ import annotations
 
 import sys
-import threading
 
 
 def _write_phases(journal_dir: str, job_id: str, phases: dict) -> None:
@@ -54,47 +56,42 @@ def main(argv: list[str] | None = None) -> int:
     journal_dir, job_id = argv
     from burla_spark import jobs
 
-    # Pre-Spark heartbeat: JVM boot can exceed the staleness window,
-    # and a stale-looking 'running' manifest invites a concurrent
-    # redrive from an external observer. Pure file write — needs no
-    # SparkSession (journal_dir is explicit).
-    stop = threading.Event()
-
-    def beat() -> None:
-        while not stop.wait(jobs.HEARTBEAT_INTERVAL_S):
-            jobs.journal_heartbeat(None, job_id, journal_dir)
-
-    threading.Thread(target=beat, daemon=True, name=f"{job_id}-boot-beat").start()
     try:
         import os
 
         from burla_spark.session import get_spark
 
-        # SLIM RUNNER PROFILE: the runner re-executes exactly one map
-        # job and journals its results — it does not need (and must not
-        # reserve) the submitting session's interactive-analytics heap.
-        # spark.driver.memory is a static conf, so it only applies when
-        # this process CREATES the session (always, for a fresh runner).
-        spark = get_spark(
-            app_name=f"burla-detached-{job_id}",
-            extra_conf={
-                "spark.driver.memory": os.environ.get(
-                    "SPARK_GRAFT_RUNNER_MEM", "8g"
-                ),
-            },
-        )
-        phases["spark_ready"] = time.time()
-        _write_phases(journal_dir, job_id, phases)
-        if jobs.cancel_requested(spark, job_id, journal_dir):
-            # canceled while the runner was booting: never submit
-            jobs.journal_cancel(spark, job_id, journal_dir)
-            return 0
-        handle = jobs.redrive(
-            spark, job_id, journal_dir=journal_dir, force=True,
-            clear_stale_cancel=False,
-        )
+        # Boot heartbeat: JVM boot can exceed the staleness window, and
+        # a stale-looking 'running' manifest invites a concurrent
+        # redrive from an external observer. The beats stop at submit,
+        # where the journaled job's own jobs.heartbeat takes over — one
+        # beat thread per sidecar at a time.
+        with jobs.heartbeat(journal_dir, job_id):
+            # SLIM RUNNER PROFILE: the runner re-executes exactly one
+            # map job and journals its results — it does not need (and
+            # must not reserve) the submitting session's
+            # interactive-analytics heap. spark.driver.memory is a
+            # static conf, so it only applies when this process CREATES
+            # the session (always, for a fresh runner).
+            spark = get_spark(
+                app_name=f"burla-detached-{job_id}",
+                extra_conf={
+                    "spark.driver.memory": os.environ.get(
+                        "SPARK_GRAFT_RUNNER_MEM", "8g"
+                    ),
+                },
+            )
+            phases["spark_ready"] = time.time()
+            _write_phases(journal_dir, job_id, phases)
+            if jobs.cancel_requested(spark, job_id, journal_dir):
+                # canceled while the runner was booting: never submit
+                jobs.journal_cancel(spark, job_id, journal_dir)
+                return 0
+            handle = jobs.redrive(
+                spark, job_id, journal_dir=journal_dir, force=True,
+                clear_stale_cancel=False,
+            )
         phases["job_submitted"] = time.time()
-        stop.set()  # the detached machinery heartbeats from here on
         handle.result()  # block until journal_finish/fail/cancel ran
         phases["job_done"] = time.time()
         _write_phases(journal_dir, job_id, phases)
@@ -109,11 +106,9 @@ def main(argv: list[str] | None = None) -> int:
         # rewrite is an idempotent no-op. Best-effort.
         try:
             jobs.journal_fail(None, job_id, exc, journal_dir)
-        except Exception:  # noqa: BLE001
+        except OSError:
             pass
         raise
-    finally:
-        stop.set()
 
 
 if __name__ == "__main__":

@@ -27,6 +27,15 @@ batch out per Arrow input batch), and Spark's deterministic task retry
 provides the exactly-once contract.
 At scale the input DataFrame partitions over the cluster exactly like
 any other table — a million inputs is a small DataFrame.
+
+Like the reference, there is one operator — a map over ``(index,
+pickled input)`` rows — and the modes differ only in how results come
+back. ``remote_parallel_map`` validates, pickles (:func:`_pickle_job`)
+and builds one :class:`_Plan` (rows, width, stdout sink, map stage);
+thin adapters then hand results back: collect (with repack waves,
+:meth:`_Plan.collect_table`), stream (:func:`_stream_results`) and
+detach (:func:`run_detached`, which ``jobs.run_journaled`` journals and
+``jobs.redrive`` calls with the journaled bytes).
 """
 
 from __future__ import annotations
@@ -37,8 +46,8 @@ import io
 import os
 import pickle
 import sys
-import threading
 import traceback
+import uuid
 from collections.abc import Callable, Iterable, Iterator
 from contextlib import redirect_stdout
 from typing import Any
@@ -104,10 +113,6 @@ def _fast_dumps(cp, obj):
 # 2048-row frames with a >=2-deep queue hold the per-row driver cost
 # to the consumer's own unpickle loop.
 _STREAM_BATCH_ROWS = 2048
-
-
-class _SkipAck(Exception):
-    """Internal: abort a partial-ack write (job already terminal)."""
 
 
 class FunctionTooBig(Exception):
@@ -269,20 +274,40 @@ def _make_udf(
     delivery.
 
     With ``partial_dir`` (detached jobs), each RESULT batch is ALSO
-    written to the job's journal as a uniquely-named Arrow IPC file
-    before being yielded — the ack half of the reference's ack/replay
-    contract (_node.py:463-524): if the driver dies mid-job, a redrive
-    resumes from the acked set instead of recomputing it. Task retries
-    produce duplicate files; the reader dedupes by index, first wins.
-    Best-effort: an unwritable dir degrades to restart-style redrive,
-    never a failed task. On a real cluster the journal dir must be
-    shared storage (documented in jobs.py)."""
+    acked to the job's journal with ``jobs.write_ack`` before being
+    yielded — the ack half of the reference's ack/replay contract
+    (_node.py:463-524): if the driver dies mid-job, a redrive resumes
+    from the acked set instead of recomputing it. On a real cluster the
+    journal dir must be shared storage (documented in jobs.py)."""
 
     def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:  # noqa: F821
         import os as _os
 
         import pyarrow as pa
 
+        from burla_spark.logs import (
+            LogStreamClient,
+            MessageStreamClient,
+            encode_result_batch,
+        )
+
+        # the log channel is best-effort: a client whose connect or
+        # send fails reports False and the row keeps its stdout.
+        log_client = LogStreamClient(*log_addr) if log_addr is not None else None
+        # generator mode: results are pushed to the driver's stream
+        # listener STRAIGHT FROM THIS UDF — the old shape round-
+        # tripped the result frame through the JVM and re-pickled
+        # every row into a SECOND python worker (foreachPartition)
+        # just to do the same socket send (guide §4: each extra
+        # JVM<->Python hop re-serializes every payload byte).
+        # Unlike the log channel this one is NOT best-effort: a
+        # failed send fails the task so Spark retries it (the driver
+        # dedups replayed indices).
+        res_client = (
+            MessageStreamClient(*result_addr, max_msg=MAX_INPUT_SIZE_BYTES + 10_000_000)
+            if result_addr is not None
+            else None
+        )
         # mark this python worker so a NESTED remote_parallel_map call
         # (user function calling rpm again) degrades to the
         # executor-local map instead of failing on a missing session.
@@ -294,43 +319,9 @@ def _make_udf(
         _prior_flag = _os.environ.get("BURLA_SPARK_IN_WORKER")
         _os.environ["BURLA_SPARK_IN_WORKER"] = "1"
         try:
-
             # results serialize with cloudpickle so locally-defined classes
             # round-trip (by-value), mirroring the input path.
-            try:
-                from pyspark import cloudpickle as result_pickler  # type: ignore
-            except ImportError:  # pragma: no cover
-                import cloudpickle as result_pickler  # type: ignore
-
-            log_client = None
-            if log_addr is not None:
-                try:
-                    from burla_spark.logs import LogStreamClient
-
-                    log_client = LogStreamClient(*log_addr)
-                except Exception:  # noqa: BLE001 — log channel is best-effort
-                    log_client = None
-
-            # generator mode: results are pushed to the driver's stream
-            # listener STRAIGHT FROM THIS UDF — the old shape round-
-            # tripped the result frame through the JVM and re-pickled
-            # every row into a SECOND python worker (foreachPartition)
-            # just to do the same socket send (guide §4: each extra
-            # JVM<->Python hop re-serializes every payload byte).
-            # Unlike the log channel this one is NOT best-effort: a
-            # failed construction or send fails the task so Spark
-            # retries it (the driver dedups replayed indices).
-            res_client = None
-            if result_addr is not None:
-                from burla_spark.logs import (
-                    MessageStreamClient,
-                    encode_result_batch,
-                )
-
-                res_client = MessageStreamClient(
-                    *result_addr, max_msg=MAX_INPUT_SIZE_BYTES + 10_000_000
-                )
-
+            result_pickler = _cloudpickle()
             fn = pickle.loads(function_pkl)
             for batch in batches:
                 out: dict[str, list] = {name: [] for name in RESULT_COLUMNS}
@@ -369,77 +360,35 @@ def _make_udf(
                     # latency: a finished batch is on the wire before
                     # the next one computes), in wire frames bounded by
                     # _STREAM_BATCH_ROWS rows / ~1 MB of payload.
-                    buf: list[tuple] = []
-                    buf_bytes = 0
+                    frames: list[list[tuple]] = [[]]
+                    frame_bytes = 0
                     for rec in zip(*out.values()):
-                        buf.append(rec)
-                        buf_bytes += (len(rec[2]) if rec[2] else 0) + 64
-                        if (
-                            len(buf) >= _STREAM_BATCH_ROWS
-                            or buf_bytes >= 1_000_000
-                        ):
-                            if not res_client.send_frame(
-                                encode_result_batch(buf)
-                            ):
-                                raise RuntimeError(
-                                    "result-stream push to driver failed; "
-                                    "task will retry"
-                                )
-                            buf, buf_bytes = [], 0
-                    if buf and not res_client.send_frame(
-                        encode_result_batch(buf)
-                    ):
-                        raise RuntimeError(
-                            "result-stream push to driver failed; "
-                            "task will retry"
-                        )
+                        if len(frames[-1]) >= _STREAM_BATCH_ROWS or frame_bytes >= 1_000_000:
+                            frames.append([])
+                            frame_bytes = 0
+                        frames[-1].append(rec)
+                        frame_bytes += (len(rec[2]) if rec[2] else 0) + 64
+                    for frame in frames:
+                        if frame and not res_client.send_frame(encode_result_batch(frame)):
+                            raise RuntimeError(
+                                "result-stream push to driver failed; task will retry"
+                            )
                     # rows delivered over the socket — emit no batch
                     # (the JVM side of this stage only drains empties).
                     continue
                 rb = pa.RecordBatch.from_pydict(out, schema=result_schema())
                 if partial_dir is not None and rb.num_rows:
-                    try:
-                        import json as _json
-                        import uuid as _uuid
+                    from burla_spark.jobs import write_ack
 
-                        # a task of a canceled/failed job may finish a batch
-                        # AFTER the terminal cleanup removed partial/ — skip
-                        # the ack once the manifest left 'running' so late
-                        # writes don't recreate permanent journal litter.
-                        still_running = True
-                        manifest = _os.path.join(
-                            _os.path.dirname(partial_dir), "manifest.json"
-                        )
-                        try:
-                            with open(manifest) as _fh:
-                                still_running = (
-                                    _json.load(_fh).get("status") == "running"
-                                )
-                        except (OSError, ValueError):
-                            pass  # unreadable/missing manifest: ack anyway
-                        if not still_running:
-                            raise _SkipAck()
-                        _os.makedirs(partial_dir, exist_ok=True)
-                        path = _os.path.join(
-                            partial_dir, f"part-{_uuid.uuid4().hex}.arrow"
-                        )
-                        with pa.ipc.new_file(path + ".tmp", rb.schema) as writer:
-                            writer.write_batch(rb)
-                        _os.replace(path + ".tmp", path)  # readers never see torn acks
-                    except Exception:  # noqa: BLE001 — ack log is best-effort
-                        pass
+                    write_ack(partial_dir, rb)
                 yield rb
         finally:
             # close the push sockets even on a mid-batch error: python
             # workers are REUSED across tasks, so an unclosed socket
-            # would outlive this task.
-            try:
-                if res_client is not None:
-                    res_client.close()
-                if log_client is not None:
-                    log_client.close()
-            except Exception:  # noqa: BLE001
-                pass
+            # would outlive this task. close() never raises.
+            for client in (res_client, log_client):
+                if client is not None:
+                    client.close()
             if _prior_flag is None:
                 _os.environ.pop("BURLA_SPARK_IN_WORKER", None)
             else:
@@ -756,181 +705,366 @@ def materialize_results_arrow(tbl, deliver) -> list:
     return [_result_value(row, deliver) for row in zip(*cols)]
 
 
-def _stream_results(spark, build_result_df, deliver, log_server, n_expected):
-    """COMPLETION-ordered result generator (reference parity:
-    `_remote_parallel_map.py:703-715` yields from a client-side Queue in
-    the order results finish).
+def _pickle_job(function_, inputs: list) -> tuple[bytes, list[tuple[int, bytes]]]:
+    """The job's function pickle and its ``(idx, blob)`` input rows,
+    with the reference's size guards. Pickling runs with the function's
+    user module registered by value (:func:`_user_module_by_value`)."""
+    cp = _cloudpickle()
+    with _user_module_by_value(cp, function_):
+        function_pkl = cp.dumps(function_)
+        if len(function_pkl) > MAX_FUNCTION_SIZE_BYTES:
+            raise FunctionTooBig(
+                f"pickled function is {len(function_pkl)} bytes "
+                f"(max {MAX_FUNCTION_SIZE_BYTES})"
+            )
+        rows = []
+        for i, item in enumerate(inputs):
+            # cloudpickle semantics (inputs may be locally-defined
+            # classes/closures, exactly like the reference's input
+            # path) with the plain-pickle fast path for scalar
+            # payloads — this loop is serial driver work on the
+            # dispatch critical path.
+            blob = _fast_dumps(cp, item)
+            if len(blob) > MAX_INPUT_SIZE_BYTES:
+                raise InputTooBig(
+                    f"input {i} pickles to {len(blob)} bytes "
+                    f"(max {MAX_INPUT_SIZE_BYTES})"
+                )
+            rows.append((i, blob))
+    return function_pkl, rows
 
-    The compute UDF itself pushes each finished batch of result rows to
-    a driver-side message listener (``build_result_df(addr)`` builds the
-    plan with the push address baked in) and the generator yields from
-    the receiving queue — a result from a fast task is available while
-    slow tasks still run, so first-result latency tracks the fastest
-    input, not the slowest partition. Pushing FROM the UDF means result
-    payloads never round-trip through the JVM: the old shape shipped
-    the result frame JVM-side and re-pickled every row into a second
-    python worker (foreachPartition) just to do the same socket send —
-    measured 7.5 s -> ~5 s at 1M results (guide §4, fewer
-    JVM<->Python crossings). A failed push fails the task (Spark
-    retries it; the driver dedups replayed rows by input index,
-    mirroring the reference's ack/replay exactly-once contract). The
-    action — a noop-sink write that merely drains the (empty) stage
-    output — runs under a unique job tag; if the consumer abandons the
-    generator or an error row raises, the finally CANCELS the tag
-    before closing the listener — otherwise every still-running task's
-    push would fail and retry maxFailures times, re-executing user
-    code. If the listener cannot even be constructed, falls back to
-    the partition-ordered ``toLocalIterator`` path over a plan built
-    WITHOUT a push address (rows come back as frames)."""
+
+def _gpu_profile(spark: SparkSession, func_gpu, func_cpu, generator: bool):
+    """The map stage's ResourceProfile for ``func_gpu``, or None.
+
+    Builds the exact stage-level profile a GPU cluster would run with
+    (reference providers/catalog.py:31-62,140-160 routes func_gpu to
+    GPU machine types), then gates on the cluster actually advertising
+    GPU executor resources — this env has none, so the profile is
+    constructed and verified but the run refuses with the recipe
+    attached."""
+    if not func_gpu:
+        return None
+    if generator:
+        raise ValueError(
+            "func_gpu with generator=True is not supported — run "
+            "detached or collecting (the profile applies to the "
+            "collect-path job)"
+        )
+    profile = gpu_resource_profile(func_gpu, func_cpu=func_cpu)
+    if not _cluster_has_gpus(spark):
+        err = NotImplementedError(
+            "func_gpu maps to a stage-level ResourceProfile "
+            f"(task: {func_gpu} gpu + {func_cpu} cpus; executor: gpu "
+            "request with nvidia discovery script), but this cluster "
+            "advertises no GPU executor resources. On a GPU cluster "
+            "set spark.executor.resource.gpu.amount / "
+            "spark.task.resource.gpu.amount (or use dynamic "
+            "allocation) and the attached .resource_profile is "
+            "applied to the map stage via mapInArrow(profile=...)."
+        )
+        err.resource_profile = profile
+        raise err
+    return profile
+
+
+# Wave size: WAVES_PER_WIDTH partitions-worth of inputs per repack wave —
+# wide enough to amortize per-job overhead, narrow enough that a
+# RAM-pressure change takes effect within a couple of waves.
+WAVES_PER_WIDTH = 4
+
+
+class _Plan:
+    """What every RPM mode shares: the pickled function and its
+    ``(idx, blob)`` rows, the width, the stdout sink and live-log
+    listener, and the map stage over any slice of the rows.
+
+    ``deliver`` is the ONE stdout sink for both channels: the live TCP
+    push and the with-result fallback. Exactly-once per input — a
+    worker clears row stdout iff its live push succeeded, and the
+    driver additionally dedups by index (logs.once_per_index)."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        function_pkl: bytes,
+        rows: list[tuple[int, bytes]],
+        *,
+        func_cpu: int = 1,
+        func_ram: str | int = "dynamic",
+        max_parallelism: int | None = None,
+        capture_stdout: bool = True,
+        stdout_sink: Callable[[int, str], None] | None = None,
+        gpu_profile=None,
+    ):
+        from burla_spark.logs import LogStreamServer, once_per_index
+
+        self.spark = spark
+        self.function_pkl = function_pkl
+        self.rows = rows
+        self.func_ram = func_ram
+        self.max_parallelism = max_parallelism
+        self.capture_stdout = capture_stdout
+        self.gpu_profile = gpu_profile
+        self.cpu_cap = spark.sparkContext.defaultParallelism // max(func_cpu, 1)
+        default_par = max(1, min(self.cpu_cap, _ram_parallelism_cap(spark, func_ram)))
+        # max(1, ..): a redrive whose inputs are all acked submits an
+        # empty frame — the trivial job keeps one code path for the merge.
+        self.n_parts = max(1, min(len(rows), max_parallelism or default_par * 2))
+        self.deliver = once_per_index(
+            stdout_sink or (lambda idx, text: sys.stdout.write(text))
+        )
+        self.log_server = None
+        if capture_stdout:
+            host = spark.conf.get("spark.driver.host", None) or "127.0.0.1"
+            try:
+                self.log_server = LogStreamServer(self.deliver, host)
+            except OSError:
+                pass  # no live logs: stdout rides with the result rows
+
+    def build_df(self, rows, parts, result_addr=None, partial_dir=None):
+        """The map stage over ``rows`` in ``parts`` partitions: a
+        binary input frame under ``mapInArrow`` of the worker."""
+        spark = self.spark
+        # createDataFrame over a pyarrow Table makes ONE partition per
+        # Arrow batch, and the batch size is the session's
+        # arrow.maxRecordsPerBatch — so slicing the transfer into
+        # exactly ``parts`` batches lands the input frame
+        # pre-partitioned at the target width and the old
+        # ``.repartition(parts)`` round-robin Exchange (a full shuffle
+        # + sort of every payload byte, guide §2.4) disappears.
+        # Driver-side contiguous slicing spreads rows evenly by
+        # construction. Building the Table directly also skips the
+        # pandas object-frame detour (measured 7.3 s of pd.DataFrame
+        # construction at 1M inputs). Fall back to the pandas +
+        # repartition path only when a chunk would risk oversized
+        # Arrow batches (payload-heavy inputs; a plain binary Arrow
+        # column caps at 2 GiB).
+        n_rows = len(rows)
+        chunk = -(-n_rows // max(parts, 1)) if n_rows else 1
+        total_bytes = sum(len(r[1]) for r in rows)
+        oversized = n_rows > 0 and (
+            (total_bytes / n_rows) * chunk > (1 << 30)
+            or total_bytes > int(1.5 * (1 << 30))
+        )
+        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        if oversized:
+            import pandas as pd
+
+            wave_pdf = pd.DataFrame(
+                {"idx": [r[0] for r in rows], "payload": [r[1] for r in rows]}
+            )
+            wave_df = spark.createDataFrame(
+                wave_pdf, "idx long, payload binary"
+            ).repartition(parts)
+        else:
+            import pyarrow as pa
+
+            tbl = pa.Table.from_arrays(
+                [
+                    pa.array([r[0] for r in rows], type=pa.int64()),
+                    pa.array([r[1] for r in rows], type=pa.binary()),
+                ],
+                names=["idx", "payload"],
+            )
+            prev = spark.conf.get(key)
+            try:
+                spark.conf.set(key, str(chunk))
+                wave_df = spark.createDataFrame(tbl, "idx long, payload binary")
+            finally:
+                spark.conf.set(key, prev)
+        # func_gpu: stage-level scheduling — the map stage itself runs
+        # under the GPU profile, in every mode that collects.
+        return wave_df.mapInArrow(
+            _make_udf(
+                self.function_pkl,
+                self.capture_stdout,
+                self.log_server.advertise if self.log_server is not None else None,
+                partial_dir=partial_dir,
+                result_addr=result_addr,
+            ),
+            from_arrow_schema(result_schema()),
+            profile=self.gpu_profile,
+        )
+
+    def collect_table(self, stage=None, spinner: bool = False):
+        """Run the job to ONE RESULT pyarrow Table with ``toArrow``
+        (guide §6: batches come back columnar, no JVM Row step) while
+        the live-log listener runs. ``stage`` is a :meth:`build_df`
+        over every row. Without one the job runs in repack WAVES whose
+        width is recomputed from LIVE executor free memory; inputs
+        ship per wave, and every wave keeps the GPU profile."""
+        import pyarrow as pa
+
+        from burla_spark.progress import ProgressReporter
+
+        with self.log_server or contextlib.nullcontext():
+            with ProgressReporter(self.spark) if spinner else contextlib.nullcontext():
+                if stage is not None:
+                    return stage.toArrow()
+                tables = []
+                remaining = self.rows
+                while remaining:
+                    width = max(
+                        1, min(self.cpu_cap, _live_ram_cap(self.spark, self.func_ram))
+                    )
+                    if self.max_parallelism:
+                        width = min(width, self.max_parallelism)
+                    take = max(1, width * WAVES_PER_WIDTH)
+                    wave, remaining = remaining[:take], remaining[take:]
+                    tables.append(self.build_df(wave, min(len(wave), width)).toArrow())
+                return pa.concat_tables(tables)
+
+
+def _stream_results(plan: _Plan):
+    """Stream adapter: a COMPLETION-ordered result generator (reference
+    parity: `_remote_parallel_map.py:703-715` yields from a client-side
+    Queue in the order results finish).
+
+    The worker pushes each finished batch of result rows to a
+    driver-side message listener and the generator yields from the
+    receiving queue, so first-result latency tracks the fastest input,
+    not the slowest partition, and result payloads never round-trip
+    through the JVM (measured 7.5 s -> ~5 s at 1M results against a
+    foreachPartition re-push, guide §4). A failed push fails the task;
+    Spark retries it and the driver dedups replayed rows by input
+    index (the reference's ack/replay exactly-once contract). The
+    action, a noop-sink write that drains the empty stage output, runs
+    as a ``jobs.submit`` background job. If the consumer abandons the
+    generator or an error row raises, the job is CANCELED before the
+    listeners close — otherwise every still-running task's push would
+    fail and retry maxFailures times, re-executing user code. A
+    listener that cannot bind raises."""
     import queue as _queue
-    import threading
-    import uuid
 
+    from burla_spark import jobs
     from burla_spark.logs import MessageStreamServer, decode_result_batch
 
-    try:
-        host = spark.conf.get("spark.driver.host", None) or "127.0.0.1"
-        # BOUNDED queue (reference parity: the client yields from a
-        # SizedQueue) — a slow consumer must stall the pushers, not
-        # buffer the whole job on the driver. When it fills, the
-        # cooperative put below blocks the selector thread → the
-        # listener stops reading → TCP windows close → worker sends
-        # block inside their tasks: end-to-end backpressure with no
-        # extra protocol. The depth only bounds DRIVER memory;
-        # throughput is unaffected while the consumer keeps up.
-        # Frames carry BATCHES of rows (up to _STREAM_BATCH_ROWS), so
-        # the queue is sized in batches to keep the same row bound.
-        depth = int(spark.conf.get("spark.burla.streamQueueDepth", "1024"))
-        q: "_queue.Queue" = _queue.Queue(
-            maxsize=max(2, depth // _STREAM_BATCH_ROWS)
-        )
-        res_server: "MessageStreamServer | None" = None
+    spark = plan.spark
+    # BOUNDED queue (reference parity: the client yields from a
+    # SizedQueue) — a slow consumer must stall the pushers, not buffer
+    # the whole job on the driver. When it fills, the put below blocks
+    # the selector thread → the listener stops reading → TCP windows
+    # close → worker sends block inside their tasks: end-to-end
+    # backpressure with no extra protocol. The depth only bounds DRIVER
+    # memory; throughput is unaffected while the consumer keeps up.
+    # Frames carry BATCHES of rows (up to _STREAM_BATCH_ROWS), so the
+    # queue is sized in batches to keep the same row bound.
+    depth = int(spark.conf.get("spark.burla.streamQueueDepth", "1024"))
+    q: "_queue.Queue" = _queue.Queue(maxsize=max(2, depth // _STREAM_BATCH_ROWS))
 
-        def sink(frame: bytes) -> None:
-            item = decode_result_batch(frame)
-            while True:
-                # once closed, never block: the listener drains its
-                # buffered frames through this sink at close.
-                closed = res_server is None or res_server.closed
-                try:
-                    q.put(item, not closed, 0.2)
-                    return
-                except _queue.Full:
-                    if closed:
-                        return  # consumer gone — drop; job is cancelling
-        res_server = MessageStreamServer(
-            sink,
-            host,
-            max_msg=MAX_INPUT_SIZE_BYTES + 10_000_000,
-        )
-    except Exception:  # noqa: BLE001
-        res_server = None
-
-    if res_server is None:  # pragma: no cover — no listener: degraded path
-
-        def fallback():
-            result_df = build_result_df(None)
-            try:
-                if log_server is not None:
-                    log_server.__enter__()
-                for row in result_df.toLocalIterator(prefetchPartitions=True):
-                    yield _result_value(row, deliver)
-            finally:
-                if log_server is not None:
-                    log_server.__exit__()
-
-        return fallback()
-
-    result_df = build_result_df(res_server.advertise)
-    tag = f"burla-rpm-stream-{uuid.uuid4().hex[:12]}"
-
-    def put_control(msg) -> None:
-        # control markers share the bounded queue; if the consumer is
-        # gone (server closed) give up instead of parking this thread
-        # on a queue nobody drains.
+    def put(item) -> None:
+        # result batches (listener thread) and the action's done/fail
+        # marker share the bounded queue. Once the listener closed,
+        # never block: it drains its buffered frames through here at
+        # close, and the consumer is gone.
         while True:
+            closed = res_server.closed
             try:
-                q.put(msg, timeout=0.2)
+                q.put(item, not closed, 0.2)
                 return
             except _queue.Full:
-                if res_server.closed:
-                    return
+                if closed:
+                    return  # consumer gone — drop; the job is cancelling
 
-    def run_action():
+    res_server = MessageStreamServer(
+        lambda frame: put(decode_result_batch(frame)),
+        spark.conf.get("spark.driver.host", None) or "127.0.0.1",
+        max_msg=MAX_INPUT_SIZE_BYTES + 10_000_000,
+    )
+    result_df = plan.build_df(plan.rows, plan.n_parts, result_addr=res_server.advertise)
+    n_expected = len(plan.rows)
+
+    def run_action() -> None:
         try:
-            # context-level tag (thread-local, like jobs.submit): lets
-            # the consumer cancel the action at the DAGScheduler.
-            spark.sparkContext.addJobTag(tag)
             # the UDF pushes rows itself and emits no frames; the noop
             # sink just drains the empty stage output inside the JVM —
             # no second python operator, no row re-pickling.
             result_df.write.format("noop").mode("overwrite").save()
-            put_control(("__done__", None))
+            put(("__done__", None))
         except BaseException as exc:  # noqa: BLE001 — relay to consumer
-            put_control(("__fail__", exc))
-        finally:
-            try:
-                spark.sparkContext.removeJobTag(tag)
-            except Exception:  # noqa: BLE001
-                pass
+            put(("__fail__", exc))
 
     def stream():
-        thread = threading.Thread(target=run_action, daemon=True)
         seen: set[int] = set()
         # "__done__" means the ACTION finished, not that every pushed
         # row has been drained: frames can still sit in kernel buffers /
-        # the backpressured sink when foreachPartition returns (the
-        # bounded queue makes that the common case under a slow
-        # consumer). So completion is len(seen) == n_expected; the done
-        # marker only switches the q.get to a bounded wait so a truly
-        # lost row surfaces as a loud error instead of a hang.
+        # the backpressured sink when the action returns (the bounded
+        # queue makes that the common case under a slow consumer). So
+        # completion is len(seen) == n_expected; the done marker only
+        # switches the q.get to a bounded wait so a truly lost row
+        # surfaces as a loud error instead of a hang.
         done = False
-        try:
-            if log_server is not None:
-                log_server.__enter__()
-            res_server.__enter__()
-            thread.start()
-            while len(seen) < n_expected:
-                try:
-                    msg = q.get(timeout=60.0 if done else None)
-                except _queue.Empty:
-                    raise RuntimeError(
-                        "result stream stalled after job completion: "
-                        f"{len(seen)}/{n_expected} results delivered"
-                    ) from None
-                if not isinstance(msg, list):
-                    if msg[0] == "__done__":
-                        done = True
-                    elif msg[0] == "__fail__":
-                        raise msg[1]
-                    continue
-                for tup in msg:  # one decoded batch frame
-                    idx = tup[0]
-                    if idx in seen:  # task-retry replay
+        job = None
+        with plan.log_server or contextlib.nullcontext(), res_server:
+            try:
+                job = jobs.submit(
+                    spark, run_action, tag=f"burla-rpm-stream-{uuid.uuid4().hex[:12]}"
+                )
+                while len(seen) < n_expected:
+                    try:
+                        msg = q.get(timeout=60.0 if done else None)
+                    except _queue.Empty:
+                        raise RuntimeError(
+                            "result stream stalled after job completion: "
+                            f"{len(seen)}/{n_expected} results delivered"
+                        ) from None
+                    if not isinstance(msg, list):
+                        if msg[0] == "__done__":
+                            done = True
+                        elif msg[0] == "__fail__":
+                            raise msg[1]
                         continue
-                    seen.add(idx)
-                    # fast path for the overwhelmingly common row shape
-                    # (no stdout to deliver, no error): skip
-                    # _result_value's unpacking and branchwork — at 1M
-                    # results that per-row work is driver-serial wall time.
-                    if not tup[1] and not tup[3]:  # not is_error, no stdout
-                        yield pickle.loads(tup[2])
-                    else:
-                        yield _result_value(tup, deliver)
-        finally:
-            # cancel BEFORE tearing down the listener: abandonment or
-            # an error row must stop the action, not strand tasks whose
-            # pushes now fail into Spark's retry loop.
-            if thread.is_alive():
-                try:
-                    spark.sparkContext.cancelJobsWithTag(tag)
-                except Exception:  # noqa: BLE001
-                    pass
-            res_server.__exit__()
-            if log_server is not None:
-                log_server.__exit__()
+                    for tup in msg:  # one decoded batch frame
+                        idx = tup[0]
+                        if idx in seen:  # task-retry replay
+                            continue
+                        seen.add(idx)
+                        # fast path for the overwhelmingly common row
+                        # shape (no stdout to deliver, no error): skip
+                        # _result_value's unpacking and branchwork — at
+                        # 1M results that per-row work is driver-serial
+                        # wall time.
+                        if not tup[1] and not tup[3]:  # not is_error, no stdout
+                            yield pickle.loads(tup[2])
+                        else:
+                            yield _result_value(tup, plan.deliver)
+            finally:
+                # cancel BEFORE tearing down the listeners: abandonment
+                # or an error row must stop the action, not strand tasks
+                # whose pushes now fail into Spark's retry loop. A
+                # finished job's cancel is a no-op.
+                if job is not None:
+                    job.cancel()
 
     return stream()
+
+
+def run_detached(
+    plan: _Plan,
+    journal_dir: str | None = None,
+    job_id: str | None = None,
+    done=None,
+    spinner: bool = False,
+):
+    """Detach adapter: run ``plan`` as a journaled background job
+    (``jobs.run_journaled``) and return its BackgroundJob.
+    ``jobs.redrive`` passes the orphan's ``job_id`` and its acked
+    RESULT table as ``done``. The job id comes first, so executors ack
+    into the job's own journal dir; the stage is built on the calling
+    thread, so the Spark job starts as soon as the action does."""
+    from burla_spark import jobs
+
+    job_id = job_id or f"burla-job-{uuid.uuid4().hex[:12]}"
+    base = jobs._journal_dir(plan.spark, journal_dir)
+    stage = plan.build_df(
+        plan.rows, plan.n_parts, partial_dir=jobs._partial_dir(base, job_id)
+    )
+    return jobs.run_journaled(
+        plan.spark, job_id, base, plan.function_pkl, plan.rows, done,
+        lambda: plan.collect_table(stage, spinner),
+        lambda tbl: materialize_results_arrow(tbl, plan.deliver),
+    )
 
 
 def remote_parallel_map(
@@ -949,12 +1083,7 @@ def remote_parallel_map(
     spark: SparkSession | None = None,
     capture_stdout: bool = True,
     stdout_sink: Callable[[int, str], None] | None = None,
-    _job_id: str | None = None,  # internal: jobs.redrive resubmits under the orphan's id
     journal_dir: str | None = None,
-    # internal, jobs.redrive resume: pre-pickled (orig_idx, blob) inputs
-    # still to run, and the already-acked RESULT table to merge.
-    _raw_input_rows: list | None = None,
-    _done_table=None,
 ):
     """Apply ``function_`` to every input on the cluster; return results
     (unordered list; a generator when ``generator=True``; a
@@ -1014,36 +1143,7 @@ def remote_parallel_map(
             "driver-side composition: expand inputs first and run ONE "
             "remote_parallel_map over the expanded list."
         )
-    if func_gpu:
-        # Build the exact stage-level profile a GPU cluster would run
-        # with (reference providers/catalog.py:31-62,140-160 routes
-        # func_gpu to GPU machine types), then gate on the cluster
-        # actually advertising GPU executor resources — this env has
-        # none, so the profile is constructed and verified but the run
-        # refuses with the recipe attached.
-        if generator:
-            raise ValueError(
-                "func_gpu with generator=True is not supported — run "
-                "detached or collecting (the profile applies to the "
-                "collect-path job)"
-            )
-        profile = gpu_resource_profile(func_gpu, func_cpu=func_cpu)
-        if not _cluster_has_gpus(spark):
-            err = NotImplementedError(
-                "func_gpu maps to a stage-level ResourceProfile "
-                f"(task: {func_gpu} gpu + {func_cpu} cpus; executor: gpu "
-                "request with nvidia discovery script), but this cluster "
-                "advertises no GPU executor resources. On a GPU cluster "
-                "set spark.executor.resource.gpu.amount / "
-                "spark.task.resource.gpu.amount (or use dynamic "
-                "allocation) and the attached .resource_profile is "
-                "applied to the map stage via mapInArrow(profile=...)."
-            )
-            err.resource_profile = profile
-            raise err
-        gpu_profile = profile
-    else:
-        gpu_profile = None
+    gpu_profile = _gpu_profile(spark, func_gpu, func_cpu, generator)
     if detach and generator:
         raise ValueError("detach=True and generator=True are mutually exclusive")
     if repack and (detach or generator):
@@ -1054,39 +1154,10 @@ def remote_parallel_map(
         )
 
     inputs = list(inputs)
-    if not inputs and _raw_input_rows is None:
+    if not inputs:
         # reference short-circuit (_remote_parallel_map.py:542)
         return iter(()) if generator else []
-
-    cp = _cloudpickle()
-    with _user_module_by_value(cp, function_):
-        function_pkl = cp.dumps(function_)
-        if len(function_pkl) > MAX_FUNCTION_SIZE_BYTES:
-            raise FunctionTooBig(
-                f"pickled function is {len(function_pkl)} bytes "
-                f"(max {MAX_FUNCTION_SIZE_BYTES})"
-            )
-
-        if _raw_input_rows is not None:
-            # redrive resume: inputs were pickled (and size-checked) by
-            # the original submission; indices are the ORIGINAL ones so
-            # journaled partials and new results key consistently.
-            rows = list(_raw_input_rows)
-        else:
-            rows = []
-            for i, item in enumerate(inputs):
-                # cloudpickle semantics (inputs may be locally-defined
-                # classes/closures, exactly like the reference's input
-                # path) with the plain-pickle fast path for scalar
-                # payloads — this loop is serial driver work on the
-                # dispatch critical path.
-                blob = _fast_dumps(cp, item)
-                if len(blob) > MAX_INPUT_SIZE_BYTES:
-                    raise InputTooBig(
-                        f"input {i} pickles to {len(blob)} bytes "
-                        f"(max {MAX_INPUT_SIZE_BYTES})"
-                    )
-                rows.append((i, blob))
+    function_pkl, rows = _pickle_job(function_, inputs)
 
     if detach == "process":
         # True cross-process detach (reference A22): the job runs under
@@ -1099,258 +1170,14 @@ def remote_parallel_map(
             spark, function_pkl, rows, journal_dir=journal_dir
         )
 
-    cpu_cap = spark.sparkContext.defaultParallelism // max(func_cpu, 1)
-    ram_cap = _ram_parallelism_cap(spark, func_ram)
-    default_par = max(1, min(cpu_cap, ram_cap))
-    # max(1, ..): a redrive whose inputs are all acked submits an empty
-    # frame — the trivial job keeps one code path for the merge below.
-    n_parts = max(1, min(len(rows), max_parallelism or default_par * 2))
-
-    # Detach decides its job id BEFORE the plan is built so executors
-    # can ack per-input results into the job's own journal dir.
-    partial_path = None
-    jdir = journal_dir
-    if detach:
-        import uuid as _uuid
-
-        from burla_spark import jobs
-
-        _detach_job_id = _job_id or f"burla-job-{_uuid.uuid4().hex[:12]}"
-        partial_path = jobs._partial_dir(jobs._journal_dir(spark, jdir), _detach_job_id)
-
-    # One delivery sink for BOTH channels: the live TCP push (arrives
-    # while tasks run) and the with-result fallback. Exactly-once per
-    # input — a worker clears row stdout iff its live push succeeded,
-    # and the driver additionally dedups by index (first delivery
-    # wins; see logs.once_per_index for the retry/speculation races).
-    from burla_spark.logs import once_per_index
-
-    def _deliver_raw(idx: int, text: str) -> None:
-        if stdout_sink is not None:
-            stdout_sink(idx, text)
-        else:
-            sys.stdout.write(text)
-
-    deliver = once_per_index(_deliver_raw)
-
-    log_server = None
-    if capture_stdout:
-        try:
-            from burla_spark.logs import LogStreamServer
-
-            host = spark.conf.get("spark.driver.host", None) or "127.0.0.1"
-            log_server = LogStreamServer(deliver, host)
-        except Exception:  # noqa: BLE001 — live logs are best-effort
-            log_server = None
-
-    def _build_result_df(rows_slice, parts, result_addr=None):
-        # createDataFrame over a pyarrow Table makes ONE partition per
-        # Arrow batch, and the batch size is the session's
-        # arrow.maxRecordsPerBatch — so slicing the transfer into
-        # exactly ``parts`` batches lands the input frame
-        # pre-partitioned at the target width and the old
-        # ``.repartition(parts)`` round-robin Exchange (a full shuffle
-        # + sort of every payload byte, guide §2.4) disappears.
-        # Driver-side contiguous slicing spreads rows evenly by
-        # construction. Building the Table directly also skips the
-        # pandas object-frame detour (measured 7.3 s of pd.DataFrame
-        # construction at 1M inputs). Fall back to the pandas +
-        # repartition path only when a chunk would risk oversized
-        # Arrow batches (payload-heavy inputs; a plain binary Arrow
-        # column caps at 2 GiB).
-        n_rows = len(rows_slice)
-        chunk = -(-n_rows // max(parts, 1)) if n_rows else 1
-        total_bytes = sum(len(r[1]) for r in rows_slice)
-        oversized = (
-            n_rows > 0
-            and (
-                (total_bytes / n_rows) * chunk > (1 << 30)
-                or total_bytes > int(1.5 * (1 << 30))
-            )
-        )
-        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-        if oversized:
-            import pandas as pd
-
-            wave_pdf = pd.DataFrame(
-                {
-                    "idx": [r[0] for r in rows_slice],
-                    "payload": [r[1] for r in rows_slice],
-                }
-            )
-            wave_df = spark.createDataFrame(
-                wave_pdf, "idx long, payload binary"
-            ).repartition(parts)
-        else:
-            import pyarrow as pa
-
-            tbl = pa.Table.from_arrays(
-                [
-                    pa.array([r[0] for r in rows_slice], type=pa.int64()),
-                    pa.array([r[1] for r in rows_slice], type=pa.binary()),
-                ],
-                names=["idx", "payload"],
-            )
-            prev = spark.conf.get(key)
-            try:
-                spark.conf.set(key, str(chunk))
-                wave_df = spark.createDataFrame(tbl, "idx long, payload binary")
-            finally:
-                spark.conf.set(key, prev)
-        # func_gpu: stage-level scheduling — the map stage itself runs
-        # under the GPU profile, in every mode that collects.
-        return wave_df.mapInArrow(
-            _make_udf(
-                function_pkl,
-                capture_stdout,
-                log_server.advertise if log_server is not None else None,
-                partial_dir=partial_path,
-                result_addr=result_addr,
-            ),
-            from_arrow_schema(result_schema()),
-            profile=gpu_profile,
-        )
-
-    # repack ships inputs per wave — building (and eagerly Arrow-
-    # transferring) the full-input frame here would double driver
-    # memory and driver->JVM traffic for a plan the wave loop ignores.
-    # The generator path builds its own plan (with the result-push
-    # address baked into the UDF) inside _stream_results.
-    result_df = None if (repack or generator) else _build_result_df(rows, n_parts)
-
+    plan = _Plan(
+        spark, function_pkl, rows, func_cpu=func_cpu, func_ram=func_ram,
+        max_parallelism=max_parallelism, capture_stdout=capture_stdout,
+        stdout_sink=stdout_sink, gpu_profile=gpu_profile,
+    )
     if generator:
-        return _stream_results(
-            spark,
-            lambda addr: _build_result_df(rows, n_parts, result_addr=addr),
-            deliver,
-            log_server,
-            len(rows),
-        )
-
-    # Wave size: WAVES_PER_WIDTH partitions-worth of inputs per wave —
-    # wide enough to amortize per-job overhead, narrow enough that a
-    # RAM-pressure change takes effect within a couple of waves.
-    WAVES_PER_WIDTH = 4
-
-    # Every non-streaming mode collects a RESULT pyarrow Table with
-    # toArrow (guide §6 "Arrow for driver transfers"): the worker's
-    # batches come back columnar, with no JVM Row -> Python Row step.
-    def _run_collect():
-        if not repack:
-            return result_df.toArrow()
-        import pyarrow as pa
-
-        tables = []
-        remaining = list(rows)
-        while remaining:
-            width = max(
-                1, min(cpu_cap, _live_ram_cap(spark, func_ram))
-            )
-            if max_parallelism:
-                width = min(width, max_parallelism)
-            take = max(1, width * WAVES_PER_WIDTH)
-            wave, remaining = remaining[:take], remaining[take:]
-            # func_gpu + repack: every wave still runs under the GPU
-            # profile — dropping it would schedule more tasks than devices.
-            tables.append(_build_result_df(wave, min(len(wave), width)).toArrow())
-        return pa.concat_tables(tables)
-
-    def collect_table():
-        with log_server if log_server is not None else contextlib.nullcontext():
-            if spinner:
-                from burla_spark.progress import ProgressReporter
-
-                with ProgressReporter(spark):
-                    return _run_collect()
-            return _run_collect()
-
+        return _stream_results(plan)
     if detach:
-        # Journal the detached job (reference job_watcher.py:259,294-301
-        # keeps a detached job observable after the client disconnects):
-        # manifest now, result rows on completion — a SECOND process can
-        # jobs.list_jobs / jobs.fetch_results after this driver exits.
-        # Journaling is best-effort: an unwritable journal dir degrades
-        # to in-process-only detach, never to a failed job.
-        from burla_spark import jobs
-
-        job_id = _detach_job_id
-        # already-acked rows from a previous run of this job id — merged
-        # into the journal and the returned results, never recomputed.
-        n_done = _done_table.num_rows if _done_table is not None else 0
-        try:
-            # payload first (function + inputs, size-capped) so the
-            # manifest's redrivable flag is truthful from the start —
-            # an orphaned job (driver death, stale heartbeat) can then
-            # be re-driven by a second process via jobs.redrive.
-            # On a redrive RESUME keep the ORIGINAL full payload:
-            # overwriting it with only the remaining inputs would make
-            # recoverability of the acked inputs depend solely on the
-            # partial/ files — a torn ack file after a second driver
-            # death would then silently drop them from the job.
-            if _raw_input_rows is not None:
-                redrivable = True  # redrive loaded it, so it exists
-            else:
-                redrivable = jobs.journal_payload(
-                    spark, job_id, function_pkl, rows, jdir
-                )
-            jobs.journal_start(
-                spark, job_id, len(rows) + n_done, jdir,
-                redrivable=redrivable,
-            )
-        except Exception:  # noqa: BLE001
-            pass
-
-        handle_box: list = []  # filled with the BackgroundJob post-submit
-
-        def journaled_action():
-            # heartbeat the RUNNING manifest so a second process can
-            # tell a live in-flight job from a dead driver's orphan —
-            # and honor a cross-process cancel flag (the reference's
-            # dashboard stop endpoint) within one heartbeat interval
-            stop_beat = threading.Event()
-
-            def beat():
-                while not stop_beat.wait(jobs.HEARTBEAT_INTERVAL_S):
-                    try:
-                        jobs.journal_heartbeat(spark, job_id, jdir)
-                        if jobs.cancel_requested(spark, job_id, jdir) and handle_box:
-                            handle_box[0].cancel()
-                            return
-                    except Exception:  # noqa: BLE001
-                        pass
-
-            threading.Thread(target=beat, daemon=True, name=f"{job_id}-beat").start()
-            try:
-                tbl = collect_table()
-            except BaseException as exc:
-                stop_beat.set()
-                try:
-                    canceled = (handle_box and handle_box[0]._canceled) or (
-                        jobs.cancel_requested(spark, job_id, jdir)
-                    )
-                    if canceled:
-                        jobs.journal_cancel(spark, job_id, jdir)
-                    else:
-                        jobs.journal_fail(spark, job_id, exc, jdir)
-                except Exception:  # noqa: BLE001
-                    pass
-                raise
-            stop_beat.set()
-            if n_done:
-                import pyarrow as pa
-
-                tbl = pa.concat_tables([tbl, _done_table])
-            try:
-                # error rows journal too — fetch_results re-raises them
-                # with the same fidelity a live call would have.
-                jobs.journal_finish(spark, job_id, tbl, jdir)
-            except Exception:  # noqa: BLE001
-                pass
-            return materialize_results_arrow(tbl, deliver)
-
-        bg = jobs.submit(spark, journaled_action, tag=job_id)
-        bg.job_id = job_id
-        handle_box.append(bg)
-        return bg
-
-    return materialize_results_arrow(collect_table(), deliver)
+        return run_detached(plan, journal_dir, spinner=spinner)
+    stage = None if repack else plan.build_df(rows, plan.n_parts)
+    return materialize_results_arrow(plan.collect_table(stage, spinner), plan.deliver)

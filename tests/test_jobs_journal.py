@@ -337,6 +337,55 @@ def test_cross_process_cancel_inflight_job(spark, journal_dir):
         jobs.fetch_results(spark, job_id)
 
 
+def test_cancel_before_the_spark_job_starts_is_not_lost(spark, journal_dir, monkeypatch):
+    """A cross-process cancel that lands before the detached job's
+    Spark job exists finds no job to interrupt. The heartbeat keeps
+    calling the cancel at every beat that sees the flag, so the job is
+    interrupted once it starts instead of running to completion."""
+    import time
+
+    monkeypatch.setattr(jobs, "HEARTBEAT_INTERVAL_S", 0.1)
+    df_type = type(spark.range(1))
+    to_arrow = df_type.toArrow
+
+    def late_to_arrow(df):
+        time.sleep(1.0)  # the first beats see the flag before the job
+        return to_arrow(df)
+
+    monkeypatch.setattr(df_type, "toArrow", late_to_arrow)
+
+    def slow(x):
+        import time
+
+        time.sleep(15)
+        return x
+
+    t0 = time.monotonic()
+    job = remote_parallel_map(slow, range(4), spark=spark, detach=True)
+    jobs.request_cancel(spark, job.job_id)
+    with pytest.raises(jobs.JobCanceled):
+        job.result(timeout=60)
+    assert time.monotonic() - t0 < 10
+    doc = next(d for d in jobs.list_jobs(spark) if d["job_id"] == job.job_id)
+    assert doc["status"] == "canceled"
+
+
+def test_unwritable_journal_degrades_to_in_process_detach(spark, tmp_path):
+    """Fault injection for the journal fallback: a journal dir below a
+    regular file cannot be created (even as root, unlike a chmod), so
+    the manifest, the payload and the executors' acks all fail. The
+    detached job must still return every result, journaling nothing."""
+    blocker = tmp_path / "a_file"
+    blocker.write_text("")
+    jdir = str(blocker / "jobs")
+    job = remote_parallel_map(
+        lambda x: x * 2, range(10), spark=spark, detach=True, journal_dir=jdir
+    )
+    assert sorted(job.result(timeout=120)) == [x * 2 for x in range(10)]
+    assert jobs.list_jobs(spark, jdir) == []
+    assert blocker.is_file()
+
+
 def test_request_cancel_unknown_job_raises(spark, journal_dir):
     with pytest.raises(KeyError):
         jobs.request_cancel(spark, "burla-job-nope")

@@ -22,6 +22,15 @@ def _print_and_identity(x):
     return x
 
 
+def test_public_signature_has_no_private_parameters():
+    """Internal callers (redrive) reach the detach adapter directly;
+    the public operator carries no underscore parameters for them."""
+    import inspect
+
+    params = inspect.signature(remote_parallel_map).parameters
+    assert [name for name in params if name.startswith("_")] == []
+
+
 def test_roundtrip_unordered(spark):
     results = remote_parallel_map(_print_and_identity, list(range(100)), spark=spark)
     assert len(results) == 100
