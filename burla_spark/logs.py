@@ -58,12 +58,15 @@ sets the closed flag, writes one byte to the pipe and joins the reader
    the pipe.
 
 So a frame a worker had fully sent before the close is delivered, not
-dropped with the socket buffers. One race remains: a frame sent AFTER
-the close is lost. In local mode a worker pushes an input's log frame
-before its result, so the log is in the driver's buffers by the time
-the consumer has seen every result. On remote executors the log frame
-travels on its own connection and can still arrive after its result,
-and so after the close.
+dropped with the socket buffers.
+
+Order rule: a job has ONE listener and each task ONE connection, and
+every frame leads with a kind byte — stdout or result batch. The worker
+sends an input's stdout frame before the batch that holds its result;
+TCP keeps order on one connection, and the reader hands the stdout to
+its sink before it queues the batch. So an input's stdout reaches the
+sink before its result can be yielded, on local and remote executors
+alike.
 """
 
 from __future__ import annotations
@@ -77,21 +80,25 @@ import threading
 from collections.abc import Callable
 
 _LEN = struct.Struct(">I")
-_LOG_HEAD = struct.Struct(">q")
+_LOG_HEAD = struct.Struct(">Bq")  # kind byte, input index
 _MAX_MSG = 1_000_000  # mirror the reference's 1 MB log-response cap
 _TOKEN_LEN = 16
 _RECV_CHUNK = 1 << 16
 
 
 # ---------------------------------------------------------------------------
-# frame codecs — struct, not pickle, on the wire
+# frame codecs — struct, not pickle, on the wire. Every frame's first
+# byte is its kind; the decoders start reading after it.
 # ---------------------------------------------------------------------------
+STDOUT, RESULT = 0, 1
+
+
 def encode_log_frame(idx: int, text: str) -> bytes:
-    return _LOG_HEAD.pack(idx) + text.encode("utf-8", "replace")
+    return _LOG_HEAD.pack(STDOUT, idx) + text.encode("utf-8", "replace")
 
 
 def decode_log_frame(frame: bytes) -> tuple[int, str]:
-    (idx,) = _LOG_HEAD.unpack_from(frame)
+    _, idx = _LOG_HEAD.unpack_from(frame)
     return idx, frame[_LOG_HEAD.size :].decode("utf-8", "replace")
 
 
@@ -116,7 +123,7 @@ def encode_result_batch(rows: list[tuple]) -> bytes:
     unpacks cut that to a handful of C calls plus one slice per
     non-empty value."""
     n = len(rows)
-    parts = [_LEN.pack(n)]
+    parts = [bytes((RESULT,)), _LEN.pack(n)]
     parts.append(struct.pack(f">{n}q", *(int(r[0]) for r in rows)))
     parts.append(bytes(1 if r[1] else 0 for r in rows))
     for f, is_text in enumerate(_ROW_TEXT_FIELDS, start=2):
@@ -141,8 +148,8 @@ def encode_result_batch(rows: list[tuple]) -> bytes:
 
 def decode_result_batch(frame: bytes) -> list[tuple]:
     mv = memoryview(frame)
-    (n,) = _LEN.unpack_from(mv)
-    off = _LEN.size
+    (n,) = _LEN.unpack_from(mv, 1)
+    off = 1 + _LEN.size
     idxs = struct.unpack_from(f">{n}q", mv, off)
     off += 8 * n
     errs = tuple(map(bool, bytes(mv[off : off + n])))
@@ -156,38 +163,42 @@ def decode_result_batch(frame: bytes) -> list[tuple]:
             continue
         lens = struct.unpack_from(f">{n}i", mv, off)
         off += 4 * n
-        vals: list | None = None
-        if is_text:
-            if max(lens) == 0 and min(lens) == 0:
-                # common case: every stdout/error text is "" — no
-                # per-value decode calls at all
-                vals = [""] * n
-            if vals is None:
-                vals = []
-                for length in lens:
-                    if length < 0:
-                        vals.append(None)
-                    elif length == 0:
-                        vals.append("")
-                    else:
-                        vals.append(
-                            bytes(mv[off : off + length]).decode(
-                                "utf-8", "replace"
-                            )
-                        )
-                        off += length
-        else:
-            vals = []
-            for length in lens:
-                if length < 0:
-                    vals.append(None)
-                else:
-                    # slice the bytes object directly — bytes->bytes
-                    # slicing is one C call vs memoryview+copy
-                    vals.append(frame[off : off + length])
-                    off += length
+        if is_text and not any(lens):
+            # common case: every stdout/error text is "" — no
+            # per-value decode calls at all
+            cols.append([""] * n)
+            continue
+        vals = []
+        for length in lens:
+            if length < 0:
+                vals.append(None)
+            else:
+                # slice the bytes object directly — bytes->bytes
+                # slicing is one C call vs memoryview+copy
+                raw = frame[off : off + length]
+                vals.append(raw.decode("utf-8", "replace") if is_text else raw)
+                off += length
         cols.append(vals)
     return list(zip(idxs, errs, *cols))
+
+
+def frame_sink(
+    on_stdout: Callable[[int, str], None],
+    on_result: Callable[[list[tuple]], None] | None = None,
+) -> Callable[[bytes], None]:
+    """A MessageStreamServer sink that routes frames by kind: stdout to
+    ``on_stdout(idx, text)``, result batches to ``on_result(rows)``. Any
+    other kind raises, which the server counts in ``sink_errors``."""
+
+    def sink(frame: bytes) -> None:
+        if frame[0] == STDOUT:
+            on_stdout(*decode_log_frame(frame))
+        elif frame[0] == RESULT and on_result is not None:
+            on_result(decode_result_batch(frame))
+        else:
+            raise ValueError(f"unexpected frame kind {frame[0]}")
+
+    return sink
 
 
 def once_per_index(sink: Callable[[int, str], None]) -> Callable[[int, str], None]:
@@ -228,11 +239,12 @@ class MessageStreamServer:
     appending to a list or putting on a queue.Queue both are).
 
     Use as a context manager around the job action; ``advertise`` is
-    the (host, port, token) workers need to connect. ``stats`` counts
-    what the channel delivered and what it swallowed: ``frames``
-    handed to the sink, ``drained_at_close`` (of those, the ones read
-    after ``__exit__``), ``sink_errors``, ``dropped_conns`` (token
-    mismatch or oversize frame) and ``reader_errors``."""
+    the (host, port, token, max_msg) workers need to connect: clients
+    take their frame cap from it. ``stats`` counts what the channel
+    delivered and what it swallowed: ``frames`` handed to the sink,
+    ``drained_at_close`` (of those, the ones read after ``__exit__``),
+    ``sink_errors``, ``dropped_conns`` (token mismatch or oversize
+    frame) and ``reader_errors``."""
 
     def __init__(self, sink: Callable[[bytes], None], host: str, max_msg: int = _MAX_MSG):
         self._frame_sink = sink
@@ -266,8 +278,8 @@ class MessageStreamServer:
         self._thread: threading.Thread | None = None
 
     @property
-    def advertise(self) -> tuple[str, int, bytes]:
-        return (self._host, self._port, self._token)
+    def advertise(self) -> tuple[str, int, bytes, int]:
+        return (self._host, self._port, self._token, self._max_msg)
 
     @property
     def closed(self) -> bool:
@@ -319,8 +331,12 @@ class MessageStreamServer:
                 pass
         try:
             self._sel.close()
-        except Exception:  # noqa: BLE001
+        except OSError:
             pass
+        # no frame can arrive now; a sink that reads this server (the
+        # stream's close-aware put) would otherwise keep both, and all
+        # the sink holds, in a cycle until a full garbage collection
+        self._frame_sink = None
 
     def _accept(self) -> None:
         while True:
@@ -355,12 +371,12 @@ class MessageStreamServer:
             pass
         return False
 
-    def _drain(self, st: _Conn, data: bytes | None = None) -> bool:
-        """Consume complete frames from the connection buffer; False
-        means protocol violation → drop the connection."""
-        if data:
-            st.buf += data
+    def _drain(self, st: _Conn, data: bytes) -> bool:
+        """Append ``data`` and consume complete frames from the
+        connection buffer; False means protocol violation → drop the
+        connection."""
         buf = st.buf
+        buf += data
         while True:
             if not st.authed:
                 if len(buf) < _TOKEN_LEN:
@@ -396,21 +412,14 @@ class MessageStreamServer:
         self._thread.join(timeout=2)
 
 
-class LogStreamServer(MessageStreamServer):
-    """MessageStreamServer specialized to (input_index, stdout_text)
-    log frames: invokes ``sink(idx, text)``."""
-
-    def __init__(self, sink: Callable[[int, str], None], host: str):
-        super().__init__(lambda frame: sink(*decode_log_frame(frame)), host)
-
-
 class MessageStreamClient:
-    """Worker-side push channel: one lazy connection per task; the job
-    token is sent once at connect. Every method is failure-proof — a
-    dead driver socket degrades to the fallback delivery path, never to
-    a task failure."""
+    """Worker-side push channel: one lazy connection per task, built
+    from the server's ``advertise``; the job token is sent once at
+    connect. No method raises: ``send_frame`` reports False for a frame
+    over the server's cap or a dead socket, and the caller picks the
+    fallback."""
 
-    def __init__(self, host: str, port: int, token: bytes, max_msg: int = _MAX_MSG):
+    def __init__(self, host: str, port: int, token: bytes, max_msg: int):
         self._addr = (host, port)
         self._token = token
         self._max_msg = max_msg
@@ -427,29 +436,15 @@ class MessageStreamClient:
                 self._sock.sendall(self._token)
             self._sock.sendall(_LEN.pack(len(frame)) + frame)
             return True
-        except Exception:  # noqa: BLE001
+        except OSError:
             self._dead = True
-            try:
-                if self._sock is not None:
-                    self._sock.close()
-            except Exception:  # noqa: BLE001
-                pass
-            self._sock = None
+            self.close()
             return False
 
     def close(self) -> None:
         try:
             if self._sock is not None:
                 self._sock.close()
-        except Exception:  # noqa: BLE001
+        except OSError:
             pass
         self._sock = None
-
-
-class LogStreamClient(MessageStreamClient):
-    """MessageStreamClient specialized to (input_index, stdout_text)."""
-
-    def send(self, idx: int, text: str) -> bool:
-        if not text:
-            return False
-        return self.send_frame(encode_log_frame(idx, text))

@@ -15,9 +15,9 @@ Semantics preserved (reference cites in parens):
 * errors re-raise on the driver with the original type, message, remote
   traceback text and ``burla_input_index`` (_node.py:638-663)
 * per-input stdout is captured and streamed live to the driver as each
-  input finishes (worker_client.py:154-338), through
-  ``logs.LogStreamServer``; it falls back to riding with the result row
-  when the live push fails
+  input finishes (worker_client.py:154-338), over the job's one
+  ``logs.MessageStreamServer``; it falls back to riding with the result
+  row when the live push fails
 
 Spark replaces the reference's entire transport/scheduling machinery
 (scatter, queues, work stealing, ack/replay, heartbeats — §2
@@ -259,19 +259,21 @@ def _error_fields(pickler, exc: Exception) -> tuple:
 def _make_udf(
     function_pkl: bytes,
     capture_stdout: bool,
-    log_addr: tuple[str, int, bytes] | None = None,
+    addr: tuple[str, int, bytes, int] | None = None,
     partial_dir: str | None = None,
-    result_addr: tuple[str, int, bytes] | None = None,
+    push_results: bool = False,
 ):
     """Build the mapInArrow worker: unpickle once per task, run each
     input, emit one RESULT batch (:func:`result_schema`) per input batch.
 
-    With ``log_addr``, each input's stdout is pushed LIVE to the
-    driver's log listener the moment the input finishes (reference
-    parity: worker_client.py:154-338 streams logs while the job runs);
-    a successful push clears the row's stdout so delivery is
-    exactly-once, and any push failure falls back to with-result
-    delivery.
+    With ``addr`` (the job listener's ``advertise``) the task opens ONE
+    connection and pushes each input's stdout LIVE as it finishes
+    (reference parity: worker_client.py:154-338 streams logs while the
+    job runs); a successful push clears the row's stdout (exactly-once),
+    a failed one leaves it in the row. With ``push_results`` (generator
+    mode) each RESULT batch goes over that connection, after its inputs'
+    stdout, instead of being emitted; a failed result push raises so
+    Spark retries the task.
 
     With ``partial_dir`` (detached jobs), each RESULT batch is ALSO
     acked to the job's journal with ``jobs.write_ack`` before being
@@ -286,28 +288,17 @@ def _make_udf(
         import pyarrow as pa
 
         from burla_spark.logs import (
-            LogStreamClient,
             MessageStreamClient,
+            encode_log_frame,
             encode_result_batch,
         )
 
-        # the log channel is best-effort: a client whose connect or
-        # send fails reports False and the row keeps its stdout.
-        log_client = LogStreamClient(*log_addr) if log_addr is not None else None
-        # generator mode: results are pushed to the driver's stream
-        # listener STRAIGHT FROM THIS UDF — the old shape round-
-        # tripped the result frame through the JVM and re-pickled
-        # every row into a SECOND python worker (foreachPartition)
-        # just to do the same socket send (guide §4: each extra
-        # JVM<->Python hop re-serializes every payload byte).
-        # Unlike the log channel this one is NOT best-effort: a
-        # failed send fails the task so Spark retries it (the driver
-        # dedups replayed indices).
-        res_client = (
-            MessageStreamClient(*result_addr, max_msg=MAX_INPUT_SIZE_BYTES + 10_000_000)
-            if result_addr is not None
-            else None
-        )
+        # generator mode pushes results STRAIGHT FROM THIS UDF — the
+        # old shape round-tripped the result frame through the JVM and
+        # re-pickled every row into a SECOND python worker
+        # (foreachPartition) just to do the same socket send (guide §4:
+        # each extra JVM<->Python hop re-serializes every payload byte).
+        client = MessageStreamClient(*addr) if addr is not None else None
         # mark this python worker so a NESTED remote_parallel_map call
         # (user function calling rpm again) degrades to the
         # executor-local map instead of failing on a missing session.
@@ -344,7 +335,9 @@ def _make_udf(
                         payload = None
                         error = _error_fields(result_pickler, exc)
                     text = buf.getvalue()
-                    if log_client is not None and log_client.send(idx, text):
+                    if text and client is not None and client.send_frame(
+                        encode_log_frame(idx, text)
+                    ):
                         text = ""  # delivered live — don't re-deliver with the row
                     out["idx"].append(idx)
                     out["is_error"].append(payload is None)
@@ -355,7 +348,7 @@ def _make_udf(
                     out["error_msg"].append(error_msg)
                     out["error_tb"].append(error_tb)
                     out["error_pkl"].append(error_pkl)
-                if res_client is not None:
+                if push_results:
                     # push this batch's rows now (completion-order
                     # latency: a finished batch is on the wire before
                     # the next one computes), in wire frames bounded by
@@ -369,7 +362,7 @@ def _make_udf(
                         frames[-1].append(rec)
                         frame_bytes += (len(rec[2]) if rec[2] else 0) + 64
                     for frame in frames:
-                        if frame and not res_client.send_frame(encode_result_batch(frame)):
+                        if frame and not client.send_frame(encode_result_batch(frame)):
                             raise RuntimeError(
                                 "result-stream push to driver failed; task will retry"
                             )
@@ -383,12 +376,11 @@ def _make_udf(
                     write_ack(partial_dir, rb)
                 yield rb
         finally:
-            # close the push sockets even on a mid-batch error: python
+            # close the push socket even on a mid-batch error: python
             # workers are REUSED across tasks, so an unclosed socket
             # would outlive this task. close() never raises.
-            for client in (res_client, log_client):
-                if client is not None:
-                    client.close()
+            if client is not None:
+                client.close()
             if _prior_flag is None:
                 _os.environ.pop("BURLA_SPARK_IN_WORKER", None)
             else:
@@ -776,13 +768,18 @@ WAVES_PER_WIDTH = 4
 
 class _Plan:
     """What every RPM mode shares: the pickled function and its
-    ``(idx, blob)`` rows, the width, the stdout sink and live-log
-    listener, and the map stage over any slice of the rows.
+    ``(idx, blob)`` rows, the width, the stdout sink, the job's one
+    push listener, and the map stage over any slice of the rows.
 
-    ``deliver`` is the ONE stdout sink for both channels: the live TCP
+    ``deliver`` is the ONE stdout sink for both paths: the live TCP
     push and the with-result fallback. Exactly-once per input — a
     worker clears row stdout iff its live push succeeded, and the
-    driver additionally dedups by index (logs.once_per_index)."""
+    driver additionally dedups by index (logs.once_per_index).
+
+    The listener is bound here, once. With ``on_result`` (generator
+    mode) it also carries the result batches, so it must bind and a
+    failure raises; otherwise it carries only stdout, is bound only
+    with ``capture_stdout`` and is best-effort."""
 
     def __init__(
         self,
@@ -796,8 +793,9 @@ class _Plan:
         capture_stdout: bool = True,
         stdout_sink: Callable[[int, str], None] | None = None,
         gpu_profile=None,
+        on_result: Callable[[list[tuple]], None] | None = None,
     ):
-        from burla_spark.logs import LogStreamServer, once_per_index
+        from burla_spark.logs import MessageStreamServer, frame_sink, once_per_index
 
         self.spark = spark
         self.function_pkl = function_pkl
@@ -814,15 +812,21 @@ class _Plan:
         self.deliver = once_per_index(
             stdout_sink or (lambda idx, text: sys.stdout.write(text))
         )
-        self.log_server = None
-        if capture_stdout:
-            host = spark.conf.get("spark.driver.host", None) or "127.0.0.1"
+        self.push_results = on_result is not None
+        self.listener = None
+        host = spark.conf.get("spark.driver.host", None) or "127.0.0.1"
+        if self.push_results:
+            self.listener = MessageStreamServer(
+                frame_sink(self.deliver, on_result), host,
+                max_msg=MAX_INPUT_SIZE_BYTES + 10_000_000,
+            )
+        elif capture_stdout:
             try:
-                self.log_server = LogStreamServer(self.deliver, host)
+                self.listener = MessageStreamServer(frame_sink(self.deliver), host)
             except OSError:
                 pass  # no live logs: stdout rides with the result rows
 
-    def build_df(self, rows, parts, result_addr=None, partial_dir=None):
+    def build_df(self, rows, parts, partial_dir=None):
         """The map stage over ``rows`` in ``parts`` partitions: a
         binary input frame under ``mapInArrow`` of the worker."""
         spark = self.spark
@@ -879,9 +883,9 @@ class _Plan:
             _make_udf(
                 self.function_pkl,
                 self.capture_stdout,
-                self.log_server.advertise if self.log_server is not None else None,
+                self.listener.advertise if self.listener is not None else None,
                 partial_dir=partial_dir,
-                result_addr=result_addr,
+                push_results=self.push_results,
             ),
             from_arrow_schema(result_schema()),
             profile=self.gpu_profile,
@@ -890,7 +894,7 @@ class _Plan:
     def collect_table(self, stage=None, spinner: bool = False):
         """Run the job to ONE RESULT pyarrow Table with ``toArrow``
         (guide §6: batches come back columnar, no JVM Row step) while
-        the live-log listener runs. ``stage`` is a :meth:`build_df`
+        the stdout listener runs. ``stage`` is a :meth:`build_df`
         over every row. Without one the job runs in repack WAVES whose
         width is recomputed from LIVE executor free memory; inputs
         ship per wave, and every wave keeps the GPU profile."""
@@ -898,7 +902,7 @@ class _Plan:
 
         from burla_spark.progress import ProgressReporter
 
-        with self.log_server or contextlib.nullcontext():
+        with self.listener or contextlib.nullcontext():
             with ProgressReporter(self.spark) if spinner else contextlib.nullcontext():
                 if stage is not None:
                     return stage.toArrow()
@@ -916,42 +920,38 @@ class _Plan:
                 return pa.concat_tables(tables)
 
 
-def _stream_results(plan: _Plan):
+def _stream_results(make_plan: Callable[..., _Plan]):
     """Stream adapter: a COMPLETION-ordered result generator (reference
     parity: `_remote_parallel_map.py:703-715` yields from a client-side
-    Queue in the order results finish).
+    Queue in the order results finish). ``make_plan(on_result=put)``
+    builds the job's :class:`_Plan`, whose one listener then queues the
+    result batches workers push after each input's stdout.
 
-    The worker pushes each finished batch of result rows to a
-    driver-side message listener and the generator yields from the
-    receiving queue, so first-result latency tracks the fastest input,
-    not the slowest partition, and result payloads never round-trip
-    through the JVM (measured 7.5 s -> ~5 s at 1M results against a
-    foreachPartition re-push, guide §4). A failed push fails the task;
-    Spark retries it and the driver dedups replayed rows by input
-    index (the reference's ack/replay exactly-once contract). The
-    action, a noop-sink write that drains the empty stage output, runs
-    as a ``jobs.submit`` background job. If the consumer abandons the
-    generator or an error row raises, the job is CANCELED before the
-    listeners close — otherwise every still-running task's push would
-    fail and retry maxFailures times, re-executing user code. A
-    listener that cannot bind raises."""
+    First-result latency tracks the fastest input, not the slowest
+    partition, and result payloads never round-trip through the JVM
+    (measured 7.5 s -> ~5 s at 1M results against a foreachPartition
+    re-push, guide §4). A failed push fails the task; Spark retries it
+    and the driver dedups replayed rows by input index (the reference's
+    ack/replay exactly-once contract). The action, a noop-sink write
+    that drains the empty stage output, runs as a ``jobs.submit``
+    background job. If the consumer abandons the generator or an error
+    row raises, the job is CANCELED before the listener closes —
+    otherwise every still-running task's push would fail and retry
+    maxFailures times, re-executing user code."""
     import queue as _queue
 
     from burla_spark import jobs
-    from burla_spark.logs import MessageStreamServer, decode_result_batch
 
-    spark = plan.spark
     # BOUNDED queue (reference parity: the client yields from a
     # SizedQueue) — a slow consumer must stall the pushers, not buffer
     # the whole job on the driver. When it fills, the put below blocks
     # the selector thread → the listener stops reading → TCP windows
     # close → worker sends block inside their tasks: end-to-end
     # backpressure with no extra protocol. The depth only bounds DRIVER
-    # memory; throughput is unaffected while the consumer keeps up.
-    # Frames carry BATCHES of rows (up to _STREAM_BATCH_ROWS), so the
-    # queue is sized in batches to keep the same row bound.
-    depth = int(spark.conf.get("spark.burla.streamQueueDepth", "1024"))
-    q: "_queue.Queue" = _queue.Queue(maxsize=max(2, depth // _STREAM_BATCH_ROWS))
+    # memory; two batches of up to _STREAM_BATCH_ROWS rows keep the
+    # listener decoding the next frame while the consumer works
+    # through one (see _STREAM_BATCH_ROWS).
+    q: "_queue.Queue" = _queue.Queue(maxsize=2)
 
     def put(item) -> None:
         # result batches (listener thread) and the action's done/fail
@@ -959,7 +959,7 @@ def _stream_results(plan: _Plan):
         # never block: it drains its buffered frames through here at
         # close, and the consumer is gone.
         while True:
-            closed = res_server.closed
+            closed = listener.closed
             try:
                 q.put(item, not closed, 0.2)
                 return
@@ -967,12 +967,13 @@ def _stream_results(plan: _Plan):
                 if closed:
                     return  # consumer gone — drop; the job is cancelling
 
-    res_server = MessageStreamServer(
-        lambda frame: put(decode_result_batch(frame)),
-        spark.conf.get("spark.driver.host", None) or "127.0.0.1",
-        max_msg=MAX_INPUT_SIZE_BYTES + 10_000_000,
-    )
-    result_df = plan.build_df(plan.rows, plan.n_parts, result_addr=res_server.advertise)
+    plan = make_plan(on_result=put)
+    # put reads the listener, not the plan: the listener holds put, and
+    # a reference back to the plan would keep its input rows alive in a
+    # cycle until the next full garbage collection.
+    listener = plan.listener
+    spark = plan.spark
+    result_df = plan.build_df(plan.rows, plan.n_parts)
     n_expected = len(plan.rows)
 
     def run_action() -> None:
@@ -996,7 +997,7 @@ def _stream_results(plan: _Plan):
         # surfaces as a loud error instead of a hang.
         done = False
         job = None
-        with plan.log_server or contextlib.nullcontext(), res_server:
+        with listener:
             try:
                 job = jobs.submit(
                     spark, run_action, tag=f"burla-rpm-stream-{uuid.uuid4().hex[:12]}"
@@ -1030,7 +1031,7 @@ def _stream_results(plan: _Plan):
                         else:
                             yield _result_value(tup, plan.deliver)
             finally:
-                # cancel BEFORE tearing down the listeners: abandonment
+                # cancel BEFORE tearing down the listener: abandonment
                 # or an error row must stop the action, not strand tasks
                 # whose pushes now fail into Spark's retry loop. A
                 # finished job's cancel is a no-op.
@@ -1170,13 +1171,14 @@ def remote_parallel_map(
             spark, function_pkl, rows, journal_dir=journal_dir
         )
 
-    plan = _Plan(
-        spark, function_pkl, rows, func_cpu=func_cpu, func_ram=func_ram,
+    make_plan = functools.partial(
+        _Plan, spark, function_pkl, rows, func_cpu=func_cpu, func_ram=func_ram,
         max_parallelism=max_parallelism, capture_stdout=capture_stdout,
         stdout_sink=stdout_sink, gpu_profile=gpu_profile,
     )
     if generator:
-        return _stream_results(plan)
+        return _stream_results(make_plan)
+    plan = make_plan()
     if detach:
         return run_detached(plan, journal_dir, spinner=spinner)
     stage = None if repack else plan.build_df(rows, plan.n_parts)

@@ -1,9 +1,9 @@
 """Security + scale contract of the driver-side message channel
 (burla_spark/logs.py): host-bound listener, per-job token auth, a
-pickle-free transport envelope, one selector-driven reader thread, an
-event-driven close that drains buffered frames, swallowed-failure
-counters, and first-delivery-wins log dedup. Pure-socket tests — no
-Spark session."""
+pickle-free transport envelope whose frames lead with a kind byte, one
+selector-driven reader thread, an event-driven close that drains
+buffered frames, swallowed-failure counters, and first-delivery-wins
+log dedup. Pure-socket tests — no Spark session."""
 
 from __future__ import annotations
 
@@ -16,13 +16,14 @@ from collections import Counter
 
 import pytest
 
+from burla_spark import logs
 from burla_spark.logs import (
-    LogStreamClient,
-    LogStreamServer,
     MessageStreamClient,
     MessageStreamServer,
     decode_log_frame,
     encode_log_frame,
+    encode_result_batch,
+    frame_sink,
     once_per_index,
 )
 
@@ -78,16 +79,16 @@ def test_server_binds_advertised_host_only():
     srv = MessageStreamServer(lambda b: None, HOST)
     try:
         assert srv._srv.getsockname()[0] == HOST  # not 0.0.0.0
-        host, port, token = srv.advertise
-        assert host == HOST and len(token) == 16
+        host, port, token, max_msg = srv.advertise
+        assert host == HOST and len(token) == 16 and max_msg == 1_000_000
     finally:
         srv.__exit__()
 
 
 def test_wrong_token_dropped_before_any_parse():
     hits: list = []
-    with LogStreamServer(lambda i, t: hits.append((i, t)), HOST) as srv:
-        host, port, _ = srv.advertise
+    with MessageStreamServer(frame_sink(lambda i, t: hits.append((i, t))), HOST) as srv:
+        host, port, *_ = srv.advertise
         evil = pickle.dumps((0, "pwn"))
         with socket.create_connection((host, port), timeout=2) as s:
             s.sendall(b"X" * 16 + len(evil).to_bytes(4, "big") + evil)
@@ -98,8 +99,8 @@ def test_wrong_token_dropped_before_any_parse():
 
 def test_missing_token_prefix_never_reaches_sink():
     hits: list = []
-    with LogStreamServer(lambda i, t: hits.append((i, t)), HOST) as srv:
-        host, port, token = srv.advertise
+    with MessageStreamServer(frame_sink(lambda i, t: hits.append((i, t))), HOST) as srv:
+        host, port, *_ = srv.advertise
         # a valid frame but the first 16 bytes aren't the token
         frame = encode_log_frame(1, "x")
         with socket.create_connection((host, port), timeout=2) as s:
@@ -111,10 +112,10 @@ def test_missing_token_prefix_never_reaches_sink():
 
 def test_authenticated_client_delivers():
     got: "queue.Queue" = queue.Queue()
-    with LogStreamServer(lambda i, t: got.put((i, t)), HOST) as srv:
-        client = LogStreamClient(*srv.advertise)
-        assert client.send(5, "live line\n")
-        assert client.send(9, "second\n")
+    with MessageStreamServer(frame_sink(lambda i, t: got.put((i, t))), HOST) as srv:
+        client = MessageStreamClient(*srv.advertise)
+        assert client.send_frame(encode_log_frame(5, "live line\n"))
+        assert client.send_frame(encode_log_frame(9, "second\n"))
         client.close()
         assert got.get(timeout=5) == (5, "live line\n")
         assert got.get(timeout=5) == (9, "second\n")
@@ -123,13 +124,90 @@ def test_authenticated_client_delivers():
 def test_oversize_frame_drops_connection():
     got: list = []
     with MessageStreamServer(got.append, HOST, max_msg=64) as srv:
-        client = MessageStreamClient(*srv.advertise, max_msg=1 << 20)
+        client = MessageStreamClient(*srv.advertise[:3], max_msg=1 << 20)
         assert client.send_frame(b"y" * 1000)  # accepted locally, rejected remotely
         deadline = time.time() + 3
         while time.time() < deadline and not client._dead:
             client.send_frame(b"z")  # eventually hits the closed socket
             time.sleep(0.05)
     assert got == [] or all(len(f) <= 64 for f in got)
+
+
+def test_client_takes_the_frame_cap_from_advertise():
+    """A frame over the server's cap is refused on the worker side
+    (the caller falls back) and the connection stays usable."""
+    got: "queue.Queue" = queue.Queue()
+    with MessageStreamServer(got.put, HOST, max_msg=64) as srv:
+        client = MessageStreamClient(*srv.advertise)
+        assert not client.send_frame(b"y" * 65)
+        assert client.send_frame(b"fits")
+        assert got.get(timeout=5) == b"fits"
+        client.close()
+    assert srv.stats["dropped_conns"] == 0
+
+
+# ---------------------------------------------------------------------------
+# one connection, two frame kinds
+# ---------------------------------------------------------------------------
+def test_frame_sink_routes_by_kind_in_connection_order():
+    """Stdout and result frames share one connection; the sink sees
+    them in send order, so a stdout frame sent before a result batch
+    is delivered before that batch."""
+    events: list = []
+    sink = frame_sink(
+        lambda i, t: events.append(("stdout", i, t)),
+        lambda rows: events.append(("result", [r[0] for r in rows])),
+    )
+    row = (4, False, b"p", "", None, None, None, None)
+    with MessageStreamServer(sink, HOST) as srv:
+        client = MessageStreamClient(*srv.advertise)
+        for i in range(50):
+            assert client.send_frame(encode_log_frame(i, f"line {i}\n"))
+            assert client.send_frame(encode_result_batch([(i, *row[1:])]))
+        client.close()
+        deadline = time.time() + 5
+        while srv.stats["frames"] < 100 and time.time() < deadline:
+            time.sleep(0.01)
+    expected = []
+    for i in range(50):
+        expected += [("stdout", i, f"line {i}\n"), ("result", [i])]
+    assert events == expected
+
+
+def test_frame_sink_rejects_unknown_kinds():
+    """An unknown kind, and a result frame where no result handler is
+    set, raise in the sink, which the server counts as a sink error."""
+    lines: list = []
+    with MessageStreamServer(frame_sink(lambda i, t: lines.append(i)), HOST) as srv:
+        client = MessageStreamClient(*srv.advertise)
+        assert client.send_frame(b"\x07junk")
+        assert client.send_frame(encode_result_batch([]))
+        assert client.send_frame(encode_log_frame(3, "ok"))
+        client.close()
+        deadline = time.time() + 5
+        while srv.stats["frames"] < 3 and time.time() < deadline:
+            time.sleep(0.01)
+    assert lines == [3]
+    assert srv.stats["sink_errors"] == 2
+
+
+def test_result_frames_decode_through_the_module_global(monkeypatch):
+    """frame_sink looks ``decode_result_batch`` up at call time, so a
+    wrapper installed on the module (as perfbench's tracer does) sees
+    every result frame."""
+    seen: list = []
+    real = logs.decode_result_batch
+
+    def counting(frame):
+        seen.append(len(frame))
+        return real(frame)
+
+    monkeypatch.setattr(logs, "decode_result_batch", counting)
+    got: list = []
+    frame = encode_result_batch([(1, False, b"x", "", None, None, None, None)])
+    frame_sink(lambda i, t: None, got.extend)(frame)
+    assert seen == [len(frame)]
+    assert got == [(1, False, b"x", "", None, None, None, None)]
 
 
 # ---------------------------------------------------------------------------
@@ -243,7 +321,7 @@ def test_stats_count_sink_errors_and_dropped_connections():
         got.append(frame)
 
     with MessageStreamServer(sink, HOST, max_msg=64) as srv:
-        client = MessageStreamClient(*srv.advertise, max_msg=1 << 20)
+        client = MessageStreamClient(*srv.advertise[:3], max_msg=1 << 20)
         assert client.send_frame(b"one")
         assert client.send_frame(b"bad")
         assert client.send_frame(b"two")
@@ -252,7 +330,7 @@ def test_stats_count_sink_errors_and_dropped_connections():
             s.sendall(b"X" * 16)  # wrong token
             s.settimeout(3)
             assert s.recv(1) == b""
-        oversize = MessageStreamClient(*srv.advertise, max_msg=1 << 20)
+        oversize = MessageStreamClient(*srv.advertise[:3], max_msg=1 << 20)
         assert oversize.send_frame(b"y" * 1000)
         deadline = time.time() + 5
         while srv.stats["dropped_conns"] < 2 and time.time() < deadline:

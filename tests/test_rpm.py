@@ -311,29 +311,172 @@ def _print_index(x):
 
 def test_generator_jobs_deliver_every_stdout_line_once(spark):
     """Back-to-back generator jobs: every result and every live stdout
-    line arrives exactly once. Log frames still buffered on the driver
-    when the last result is consumed must be drained at close, not
-    dropped with the listener. The sink is slowed a little so the log
-    reader lags behind the result stream, as it does under a busy
-    consumer."""
+    line arrives exactly once, and each input's line reaches the sink
+    before its result is yielded. Log frames still buffered on the
+    driver when the last result is consumed must be drained at close,
+    not dropped with the listener. The sink is slowed a little, as it
+    is under a busy consumer."""
     import time
 
     n = 2000
     for job in range(5):
         lines: list = []
+        delivered: set = set()
 
         def sink(idx, text):
             time.sleep(0.0002)
             lines.append((idx, text))
+            delivered.add(idx)
 
-        results = list(
-            remote_parallel_map(
-                _print_index, range(n), spark=spark, generator=True,
-                stdout_sink=sink,
-            )
-        )
+        results = []
+        early = 0
+        for value in remote_parallel_map(
+            _print_index, range(n), spark=spark, generator=True, stdout_sink=sink,
+        ):
+            early += value not in delivered
+            results.append(value)
+        assert early == 0, f"job {job}: {early} results yielded before their stdout"
         assert sorted(results) == list(range(n)), f"job {job}"
         assert sorted(lines) == [(i, f"line-{i}\n") for i in range(n)], f"job {job}"
+
+
+def _raise_oserror(*args, **kwargs):
+    raise OSError("listener cannot bind")
+
+
+def test_unbindable_listener_delivers_stdout_with_the_rows(spark, monkeypatch):
+    """Live-log push fails → with-result delivery: when the listener
+    cannot bind, a collect job still delivers every line exactly once,
+    through its row. A generator job needs the listener for its
+    results, so it raises."""
+    from burla_spark import logs
+
+    monkeypatch.setattr(logs.MessageStreamServer, "__init__", _raise_oserror)
+    lines: list = []
+    got = remote_parallel_map(
+        _print_index, range(20), spark=spark,
+        stdout_sink=lambda idx, text: lines.append((idx, text)),
+    )
+    assert sorted(got) == list(range(20))
+    assert sorted(lines) == [(i, f"line-{i}\n") for i in range(20)]
+    with pytest.raises(OSError, match="cannot bind"):
+        list(remote_parallel_map(_print_index, range(4), spark=spark, generator=True))
+
+
+def _print_two_megabytes(x):
+    print("x" * 2_000_000 if x == 0 else f"line-{x}")
+    return x
+
+
+def test_stdout_over_the_frame_cap_rides_with_its_row(spark):
+    """A 2 MB line is over the 1 MB stdout-frame cap of a collect job:
+    the live push is refused, and the line is delivered exactly once,
+    through its row."""
+    lines: list = []
+    got = remote_parallel_map(
+        _print_two_megabytes, range(4), spark=spark,
+        stdout_sink=lambda idx, text: lines.append((idx, text)),
+    )
+    assert sorted(got) == list(range(4))
+    assert sorted(lines) == [(0, "x" * 2_000_000 + "\n")] + [
+        (i, f"line-{i}\n") for i in range(1, 4)
+    ]
+
+
+def _print_index_in_task(x):
+    from pyspark import TaskContext
+
+    ctx = TaskContext.get()
+    print(f"line-{x}")
+    return x, ctx.partitionId(), ctx.attemptNumber()
+
+
+def test_one_listener_and_one_connection_per_task(spark, monkeypatch):
+    """A job binds at most one listener: a generator job one (stdout
+    and results), a collect job one (stdout), a collect job without
+    stdout capture none. Each generator task opens one connection."""
+    import inspect
+
+    from burla_spark import logs
+    from burla_spark.rpm import _make_udf
+
+    servers: list = []
+    accepted: list = []
+    init, accept = logs.MessageStreamServer.__init__, logs.MessageStreamServer._accept
+
+    def counting_init(self, *args, **kwargs):
+        servers.append(self)
+        init(self, *args, **kwargs)
+
+    def counting_accept(self):
+        before = len(self._sel.get_map())
+        accept(self)
+        accepted.append(len(self._sel.get_map()) - before)
+
+    monkeypatch.setattr(logs.MessageStreamServer, "__init__", counting_init)
+    monkeypatch.setattr(logs.MessageStreamServer, "_accept", counting_accept)
+    lines: list = []
+    got = list(remote_parallel_map(
+        _print_index_in_task, range(8), spark=spark, generator=True,
+        stdout_sink=lambda idx, text: lines.append(idx),
+    ))
+    assert sorted(x for x, _, _ in got) == list(range(8))
+    assert sorted(lines) == list(range(8))
+    assert len(servers) == 1
+    tasks = {(part, attempt) for _, part, attempt in got}
+    assert sum(accepted) == len(tasks)
+
+    servers.clear()
+    assert sorted(remote_parallel_map(_print_index, range(8), spark=spark)) == list(range(8))
+    assert len(servers) == 1
+    servers.clear()
+    got = remote_parallel_map(_print_index, range(8), spark=spark, capture_stdout=False)
+    assert sorted(got) == list(range(8))
+    assert servers == []
+    params = inspect.signature(_make_udf).parameters
+    assert "log_addr" not in params and "result_addr" not in params
+
+
+def test_finished_generator_frees_its_plan_without_a_cycle_collection(spark, monkeypatch):
+    """The listener holds the stream's close-aware queue callback, and
+    the callback reads the listener. Neither may keep the plan (its
+    input rows) or the stdout sink (its dedup set, and what the user's
+    sink holds) alive until the next full garbage collection."""
+    import gc
+    import time
+    import weakref
+
+    import burla_spark.rpm as rpm_mod
+
+    plans: list = []
+    plan_init = rpm_mod._Plan.__init__
+
+    def recording_init(self, *args, **kwargs):
+        plans.append(weakref.ref(self))
+        plan_init(self, *args, **kwargs)
+
+    monkeypatch.setattr(rpm_mod._Plan, "__init__", recording_init)
+
+    def sink(idx, text):
+        pass
+
+    refs = [weakref.ref(sink)]
+    gc.collect()
+    gc.disable()
+    try:
+        gen = remote_parallel_map(
+            _print_index, range(50), spark=spark, generator=True, stdout_sink=sink,
+        )
+        assert sorted(gen) == list(range(50))
+        del gen, sink
+        refs += plans
+        # the action's thread can outlive the generator by a moment
+        deadline = time.monotonic() + 10
+        while any(ref() is not None for ref in refs) and time.monotonic() < deadline:
+            time.sleep(0.05)
+        assert len(refs) == 2 and [ref() for ref in refs] == [None, None]
+    finally:
+        gc.enable()
 
 
 def test_generator_completion_order(spark):
@@ -400,7 +543,7 @@ def test_generator_abandonment_cancels_job(spark):
 
 
 def test_generator_bounded_queue_backpressure(spark):
-    """With a tiny stream-queue depth, a slow consumer must still
+    """With the two-batch stream queue, a slow consumer must still
     receive every result exactly once (pushers stall on TCP instead of
     overflowing driver memory), and abandoning the generator while the
     queue is full must not hang the session."""
@@ -408,26 +551,21 @@ def test_generator_bounded_queue_backpressure(spark):
 
     from burla_spark import remote_parallel_map
 
-    prev = spark.conf.get("spark.burla.streamQueueDepth", "1024")
-    spark.conf.set("spark.burla.streamQueueDepth", "4")
-    try:
-        gen = remote_parallel_map(
-            lambda x: x * 2, range(120), spark=spark, generator=True
-        )
-        out = []
-        for v in gen:
-            if len(out) < 5:
-                time.sleep(0.05)  # slow consumer while tasks are pushing
-            out.append(v)
-        assert sorted(out) == [x * 2 for x in range(120)]
+    gen = remote_parallel_map(
+        lambda x: x * 2, range(120), spark=spark, generator=True
+    )
+    out = []
+    for v in gen:
+        if len(out) < 5:
+            time.sleep(0.05)  # slow consumer while tasks are pushing
+        out.append(v)
+    assert sorted(out) == [x * 2 for x in range(120)]
 
-        gen2 = remote_parallel_map(
-            lambda x: x, range(120), spark=spark, generator=True
-        )
-        next(gen2)
-        gen2.close()  # abandon with a full queue → cancel, no hang
-    finally:
-        spark.conf.set("spark.burla.streamQueueDepth", prev)
+    gen2 = remote_parallel_map(
+        lambda x: x, range(120), spark=spark, generator=True
+    )
+    next(gen2)
+    gen2.close()  # abandon with a full queue → cancel, no hang
 
 
 def test_repack_waves_complete_and_resize(spark, monkeypatch):
