@@ -433,6 +433,10 @@ class MessageStreamClient:
         try:
             if self._sock is None:
                 self._sock = socket.create_connection(self._addr, timeout=2)
+                # the 2 s bound is for the connect only: a send blocked by
+                # a full driver queue is the stream's backpressure, and
+                # the driver's cancel-before-close still ends it
+                self._sock.settimeout(None)
                 self._sock.sendall(self._token)
             self._sock.sendall(_LEN.pack(len(frame)) + frame)
             return True

@@ -479,8 +479,9 @@ def _cluster_has_gpus(spark: SparkSession) -> bool:
 
 
 def _parse_ram_gb(func_ram) -> float | None:
-    """'dynamic' → 4 GB (the reference default); int → GB; strings
-    accept '8', '8G', '8GB', '512M'. None/unparseable → None."""
+    """GB per task. 'dynamic' → 4 GB, the reference default, which only
+    a repack wave's live cap (:func:`_live_ram_cap`) uses; int → GB;
+    strings accept '8', '8G', '8GB', '512M'. None/unparseable → None."""
     try:
         if isinstance(func_ram, str):
             s = func_ram.strip().upper()
@@ -492,7 +493,7 @@ def _parse_ram_gb(func_ram) -> float | None:
                 return float(s.rstrip("MB")) / 1024
             return float(s)
         return float(func_ram)
-    except Exception:  # noqa: BLE001 — sizing is best-effort
+    except (TypeError, ValueError):  # sizing is best-effort
         return None
 
 
@@ -631,18 +632,21 @@ def _ram_parallelism_cap(spark: SparkSession, func_ram) -> int:
     the executor count — the reference packs per node
     (a 10-executor × 8 GB cluster at func_ram=4G runs 20 concurrent
     tasks, not 2; spark.executor.instances defaults to 1 which also
-    covers local mode). ``func_ram`` is read by :func:`_parse_ram_gb`;
-    unparseable values fall back to no cap — sizing must never fail a
-    job."""
+    covers local mode). Only an explicit ``func_ram`` caps: 'dynamic'
+    adapts to live memory (``repack=True``), so it sets no static cap,
+    and neither does a value :func:`_parse_ram_gb` cannot read or an
+    unparseable memory conf — sizing must never fail a job."""
+    if isinstance(func_ram, str) and func_ram.strip().upper() == "DYNAMIC":
+        return 1 << 30
     gb = _parse_ram_gb(func_ram)
     if gb is None or gb <= 0:
         return 1 << 30
+    mem = (
+        spark.conf.get("spark.executor.memory", None)
+        or spark.conf.get("spark.driver.memory", None)
+        or "1g"
+    ).strip().upper()
     try:
-        mem = (
-            spark.conf.get("spark.executor.memory", None)
-            or spark.conf.get("spark.driver.memory", None)
-            or "1g"
-        ).strip().upper()
         if mem.endswith("G"):
             mem_gb = float(mem[:-1])
         elif mem.endswith("M"):
@@ -651,13 +655,13 @@ def _ram_parallelism_cap(spark: SparkSession, func_ram) -> int:
             mem_gb = float(mem[:-1]) / (1024 * 1024)
         else:
             mem_gb = float(mem) / (1024**3)  # raw bytes
-        try:
-            n_exec = int(spark.conf.get("spark.executor.instances", "1") or 1)
-        except (TypeError, ValueError):
-            n_exec = 1  # local mode / dynamic allocation: one JVM
-        return max(1, int(mem_gb // gb)) * max(1, n_exec)
-    except Exception:  # noqa: BLE001 — sizing is best-effort
+    except ValueError:
         return 1 << 30
+    try:
+        n_exec = int(spark.conf.get("spark.executor.instances", "1") or 1)
+    except (TypeError, ValueError):
+        n_exec = 1  # local mode / dynamic allocation: one JVM
+    return max(1, int(mem_gb // gb)) * max(1, n_exec)
 
 
 def _result_value(row, deliver):
@@ -805,10 +809,12 @@ class _Plan:
         self.capture_stdout = capture_stdout
         self.gpu_profile = gpu_profile
         self.cpu_cap = spark.sparkContext.defaultParallelism // max(func_cpu, 1)
-        default_par = max(1, min(self.cpu_cap, _ram_parallelism_cap(spark, func_ram)))
         # max(1, ..): a redrive whose inputs are all acked submits an
         # empty frame — the trivial job keeps one code path for the merge.
-        self.n_parts = max(1, min(len(rows), max_parallelism or default_par * 2))
+        self.n_parts = max(1, min(
+            len(rows),
+            max_parallelism or min(self.cpu_cap, _ram_parallelism_cap(spark, func_ram)),
+        ))
         self.deliver = once_per_index(
             stdout_sink or (lambda idx, text: sys.stdout.write(text))
         )
@@ -829,54 +835,29 @@ class _Plan:
     def build_df(self, rows, parts, partial_dir=None):
         """The map stage over ``rows`` in ``parts`` partitions: a
         binary input frame under ``mapInArrow`` of the worker."""
-        spark = self.spark
-        # createDataFrame over a pyarrow Table makes ONE partition per
-        # Arrow batch, and the batch size is the session's
-        # arrow.maxRecordsPerBatch — so slicing the transfer into
-        # exactly ``parts`` batches lands the input frame
-        # pre-partitioned at the target width and the old
-        # ``.repartition(parts)`` round-robin Exchange (a full shuffle
-        # + sort of every payload byte, guide §2.4) disappears.
-        # Driver-side contiguous slicing spreads rows evenly by
-        # construction. Building the Table directly also skips the
-        # pandas object-frame detour (measured 7.3 s of pd.DataFrame
-        # construction at 1M inputs). Fall back to the pandas +
-        # repartition path only when a chunk would risk oversized
-        # Arrow batches (payload-heavy inputs; a plain binary Arrow
-        # column caps at 2 GiB).
-        n_rows = len(rows)
-        chunk = -(-n_rows // max(parts, 1)) if n_rows else 1
-        total_bytes = sum(len(r[1]) for r in rows)
-        oversized = n_rows > 0 and (
-            (total_bytes / n_rows) * chunk > (1 << 30)
-            or total_bytes > int(1.5 * (1 << 30))
+        import pyarrow as pa
+
+        tbl = pa.Table.from_arrays(
+            [
+                pa.array([r[0] for r in rows], type=pa.int64()),
+                pa.array([r[1] for r in rows], type=pa.binary()),
+            ],
+            names=["idx", "payload"],
         )
-        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-        if oversized:
-            import pandas as pd
-
-            wave_pdf = pd.DataFrame(
-                {"idx": [r[0] for r in rows], "payload": [r[1] for r in rows]}
-            )
-            wave_df = spark.createDataFrame(
-                wave_pdf, "idx long, payload binary"
-            ).repartition(parts)
-        else:
-            import pyarrow as pa
-
-            tbl = pa.Table.from_arrays(
-                [
-                    pa.array([r[0] for r in rows], type=pa.int64()),
-                    pa.array([r[1] for r in rows], type=pa.binary()),
-                ],
-                names=["idx", "payload"],
-            )
-            prev = spark.conf.get(key)
-            try:
-                spark.conf.set(key, str(chunk))
-                wave_df = spark.createDataFrame(tbl, "idx long, payload binary")
-            finally:
-                spark.conf.set(key, prev)
+        # Spark scans an Arrow input under
+        # spark.sql.execution.arrow.localRelationThreshold as a local
+        # relation in min(rows, defaultParallelism) partitions, whatever
+        # its batches; a larger one becomes one partition per Arrow batch
+        # (the session's Arrow batch size in rows), and a batch never
+        # crosses a chunk of the table. So the table goes in as ``parts``
+        # contiguous chunks, and coalesce(parts) merges each chunk's
+        # batches back into one partition above the threshold or narrows
+        # the scan below it. Both are narrow steps (no shuffle), no
+        # session conf is written, and pa.array already splits a binary
+        # column at 2 GiB, so no batch outgrows a plain binary column.
+        cuts = [len(rows) * i // parts for i in range(parts + 1)]
+        tbl = pa.concat_tables([tbl.slice(a, b - a) for a, b in zip(cuts, cuts[1:])])
+        wave_df = self.spark.createDataFrame(tbl, "idx long, payload binary").coalesce(parts)
         # func_gpu: stage-level scheduling — the map stage itself runs
         # under the GPU profile, in every mode that collects.
         return wave_df.mapInArrow(
@@ -920,6 +901,21 @@ class _Plan:
                 return pa.concat_tables(tables)
 
 
+def _drain_stage(stage) -> tuple:
+    """Run a generator job's stage to its end: ``("__done__", None)``
+    or ``("__fail__", exc)``. The UDF pushes rows itself and emits no
+    batches; the noop sink just drains the empty stage output inside the
+    JVM — no second python operator, no row re-pickling. A module
+    function, so the failure's traceback (which pyspark's converted
+    exceptions keep in a cycle) reaches no frame holding the stream's
+    queue or listener."""
+    try:
+        stage.write.format("noop").mode("overwrite").save()
+        return ("__done__", None)
+    except BaseException as exc:  # noqa: BLE001 — relay to consumer
+        return ("__fail__", exc)
+
+
 def _stream_results(make_plan: Callable[..., _Plan]):
     """Stream adapter: a COMPLETION-ordered result generator (reference
     parity: `_remote_parallel_map.py:703-715` yields from a client-side
@@ -955,17 +951,15 @@ def _stream_results(make_plan: Callable[..., _Plan]):
 
     def put(item) -> None:
         # result batches (listener thread) and the action's done/fail
-        # marker share the bounded queue. Once the listener closed,
-        # never block: it drains its buffered frames through here at
-        # close, and the consumer is gone.
-        while True:
-            closed = listener.closed
+        # marker share the bounded queue. Once the listener closed, the
+        # consumer is gone: drop what arrives (the buffered frames the
+        # listener drains at close, the canceled action's marker).
+        while not listener.closed:
             try:
-                q.put(item, not closed, 0.2)
+                q.put(item, timeout=0.2)
                 return
             except _queue.Full:
-                if closed:
-                    return  # consumer gone — drop; the job is cancelling
+                pass
 
     plan = make_plan(on_result=put)
     # put reads the listener, not the plan: the listener holds put, and
@@ -975,16 +969,6 @@ def _stream_results(make_plan: Callable[..., _Plan]):
     spark = plan.spark
     result_df = plan.build_df(plan.rows, plan.n_parts)
     n_expected = len(plan.rows)
-
-    def run_action() -> None:
-        try:
-            # the UDF pushes rows itself and emits no frames; the noop
-            # sink just drains the empty stage output inside the JVM —
-            # no second python operator, no row re-pickling.
-            result_df.write.format("noop").mode("overwrite").save()
-            put(("__done__", None))
-        except BaseException as exc:  # noqa: BLE001 — relay to consumer
-            put(("__fail__", exc))
 
     def stream():
         seen: set[int] = set()
@@ -1000,7 +984,8 @@ def _stream_results(make_plan: Callable[..., _Plan]):
         with listener:
             try:
                 job = jobs.submit(
-                    spark, run_action, tag=f"burla-rpm-stream-{uuid.uuid4().hex[:12]}"
+                    spark, lambda: put(_drain_stage(result_df)),
+                    tag=f"burla-rpm-stream-{uuid.uuid4().hex[:12]}",
                 )
                 while len(seen) < n_expected:
                     try:
@@ -1096,15 +1081,19 @@ def remote_parallel_map(
       (per-task CPU pinning is spark.task.cpus at session level).
     * func_ram — RAM-aware parallelism cap, the static half of the
       reference's packing rule (catalog.py:94-101:
-      ``min(cpus // func_cpu, ram_gb // func_ram)``): concurrent tasks
-      are additionally capped at executor_memory_gb // func_ram_gb
-      ('dynamic' = 4 GB like the reference). With ``repack=True``
-      the job runs in WAVES and the width is recomputed from LIVE
-      executor free memory between waves — the dynamic half of the
-      reference's rule (worker_client.py:88-151 repacks as workers
-      free RAM) at wave granularity, since Spark cannot resize a
-      RUNNING stage (the residual §7.3.3 divergence: within one wave
-      the width is fixed).
+      ``min(cpus // func_cpu, ram_gb // func_ram)``): an explicit
+      func_ram caps the map stage's tasks at executor_memory_gb //
+      func_ram_gb per executor. 'dynamic' (the default) adapts to live
+      memory, so it sets no static cap. With ``repack=True`` the job
+      runs in WAVES and the width is recomputed from LIVE executor free
+      memory between waves ('dynamic' counts ~4 GB per task there) —
+      the dynamic half of the reference's rule (worker_client.py:88-151
+      repacks as workers free RAM) at wave granularity, since Spark
+      cannot resize a RUNNING stage (the residual §7.3.3 divergence:
+      within one wave the width is fixed).
+    * max_parallelism — the map stage's width, in place of the cpu and
+      RAM caps: never more tasks than inputs, and an input under
+      Spark's local-relation threshold never runs wider than the cores.
     * func_gpu — stage-level ResourceProfiles on a GPU cluster; raises
       here (no GPUs in this environment).
     * image / grow — container image and autoscaling are cluster-level

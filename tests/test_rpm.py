@@ -440,41 +440,56 @@ def test_one_listener_and_one_connection_per_task(spark, monkeypatch):
 def test_finished_generator_frees_its_plan_without_a_cycle_collection(spark, monkeypatch):
     """The listener holds the stream's close-aware queue callback, and
     the callback reads the listener. Neither may keep the plan (its
-    input rows) or the stdout sink (its dedup set, and what the user's
-    sink holds) alive until the next full garbage collection."""
+    input rows), the listener or the stdout sink (its dedup set, and
+    what the user's sink holds) alive until the next full garbage
+    collection — also when the consumer drains every result before the
+    noop write returns, so the stream cancels it and the write fails
+    after the consumer left."""
     import gc
     import time
     import weakref
 
     import burla_spark.rpm as rpm_mod
+    from burla_spark import jobs
 
     plans: list = []
     plan_init = rpm_mod._Plan.__init__
 
     def recording_init(self, *args, **kwargs):
-        plans.append(weakref.ref(self))
         plan_init(self, *args, **kwargs)
+        plans.append((weakref.ref(self), weakref.ref(self.listener)))
+
+    submitted: list = []
+    submit = jobs.submit
+
+    def recording_submit(*args, **kwargs):
+        submitted.append(submit(*args, **kwargs))
+        return submitted[-1]
 
     monkeypatch.setattr(rpm_mod._Plan, "__init__", recording_init)
+    monkeypatch.setattr(jobs, "submit", recording_submit)
 
-    def sink(idx, text):
-        pass
-
-    refs = [weakref.ref(sink)]
     gc.collect()
     gc.disable()
     try:
-        gen = remote_parallel_map(
-            _print_index, range(50), spark=spark, generator=True, stdout_sink=sink,
-        )
-        assert sorted(gen) == list(range(50))
-        del gen, sink
-        refs += plans
-        # the action's thread can outlive the generator by a moment
-        deadline = time.monotonic() + 10
-        while any(ref() is not None for ref in refs) and time.monotonic() < deadline:
-            time.sleep(0.05)
-        assert len(refs) == 2 and [ref() for ref in refs] == [None, None]
+        for _ in range(3):
+
+            def sink(idx, text):
+                pass
+
+            refs = [weakref.ref(sink)]
+            gen = remote_parallel_map(
+                _print_index, range(50), spark=spark, generator=True, stdout_sink=sink,
+            )
+            assert sorted(gen) == list(range(50))
+            del gen, sink
+            submitted[-1]._thread.join(timeout=30)
+            refs += plans.pop()
+            # the listener's reader thread can outlive the stream by a moment
+            deadline = time.monotonic() + 10
+            while any(ref() is not None for ref in refs) and time.monotonic() < deadline:
+                time.sleep(0.05)
+            assert [ref() for ref in refs] == [None, None, None]
     finally:
         gc.enable()
 
@@ -498,23 +513,145 @@ def test_generator_completion_order(spark):
     assert sorted([first, *rest]) == list(range(10))
 
 
+def _index_and_partition(x):
+    from pyspark import TaskContext
+
+    return x, TaskContext.get().partitionId()
+
+
 def test_func_ram_caps_parallelism(spark):
     """func_ram applies the reference's static packing rule
     (min(cpus//func_cpu, ram_gb//func_ram)): a huge per-task RAM ask
-    must shrink the input partitioning to the RAM cap, and 'dynamic'
-    (4 GB) must still run fine."""
+    must shrink the map stage to the RAM cap — one task — while
+    'dynamic' sets no static cap and still runs at full width."""
     from burla_spark.rpm import _ram_parallelism_cap
 
     mem = (spark.conf.get("spark.driver.memory", None) or "1g").upper()
-    assert _ram_parallelism_cap(spark, "dynamic") >= 1
+    assert _ram_parallelism_cap(spark, "dynamic") == 1 << 30
     # per-task ask = all of executor memory → cap 1
     assert _ram_parallelism_cap(spark, mem.rstrip("GMK")
-                                + ("G" if mem.endswith("G") else "M")) >= 1
+                                + ("G" if mem.endswith("G") else "M")) == 1
     big = _ram_parallelism_cap(spark, "100000G")
     assert big == 1
-    assert sorted(
-        remote_parallel_map(lambda x: x + 1, range(6), func_ram="100000G", spark=spark)
-    ) == list(range(1, 7))
+    got = remote_parallel_map(_index_and_partition, range(6), func_ram="100000G", spark=spark)
+    assert sorted(x for x, _ in got) == list(range(6))
+    assert {part for _, part in got} == {0}
+    got = remote_parallel_map(_index_and_partition, range(6), spark=spark)
+    width = min(6, spark.sparkContext.defaultParallelism)
+    assert len({part for _, part in got}) == width
+
+
+def test_unparseable_ram_values_set_no_cap(spark):
+    """Sizing never fails a job: a func_ram or a memory conf the parser
+    cannot read falls back to no RAM cap."""
+    from types import SimpleNamespace
+
+    from burla_spark.rpm import _parse_ram_gb, _ram_parallelism_cap
+
+    for value in ("lots", None, [4]):
+        assert _parse_ram_gb(value) is None
+        assert _ram_parallelism_cap(spark, value) == 1 << 30
+    assert _parse_ram_gb("512M") == 0.5 and _parse_ram_gb(8) == 8.0
+    confs = {"spark.executor.memory": "lots"}
+    fake = SimpleNamespace(conf=SimpleNamespace(get=lambda key, default=None: confs.get(key, default)))
+    assert _ram_parallelism_cap(fake, "1G") == 1 << 30
+    confs["spark.executor.memory"] = "8g"
+    assert _ram_parallelism_cap(fake, "1G") == 8
+
+
+@pytest.mark.parametrize("local_relation", [True, False], ids=["local_scan", "rdd_scan"])
+def test_input_frame_lands_at_n_parts(spark, local_relation):
+    """The map stage runs exactly n_parts tasks, and n_parts is the one
+    rule min(rows, max_parallelism or min(cpus // func_cpu, RAM cap)),
+    in both regimes Spark builds an Arrow input in: a local relation
+    under spark.sql.execution.arrow.localRelationThreshold, one
+    partition per Arrow batch above it (forced here with threshold 0)."""
+    import burla_spark.rpm as rpm_mod
+
+    dp = spark.sparkContext.defaultParallelism
+    mem_gb = rpm_mod._parse_ram_gb(spark.conf.get("spark.driver.memory"))
+    # 9 rows: most widths do not divide them, and each chunk must
+    # still be one partition
+    _, rows = rpm_mod._pickle_job(_print_index, range(9))
+    cases = [
+        ({}, min(9, dp)),
+        ({"max_parallelism": min(4, dp)}, min(4, dp)),
+        ({"max_parallelism": min(2, dp)}, min(2, dp)),
+        ({"max_parallelism": 1}, 1),
+        ({"func_cpu": 2}, max(1, dp // 2)),
+        ({"func_ram": f"{mem_gb / 2}G"}, min(2, dp)),
+    ]
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    prev = spark.conf.get(key)
+    if not local_relation:
+        spark.conf.set(key, "0")
+    try:
+        for kwargs, n_parts in cases:
+            plan = rpm_mod._Plan(spark, b"", rows, capture_stdout=False, **kwargs)
+            assert plan.n_parts == n_parts, kwargs
+            stage = plan.build_df(rows, plan.n_parts)
+            assert stage.rdd.getNumPartitions() == n_parts, kwargs
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_no_rpm_mode_writes_the_session_conf(spark, monkeypatch):
+    """RPM sizes its input frame without touching the session conf:
+    a conf write is session-wide, so it would race concurrent jobs and
+    leak into every other Arrow UDF in the session."""
+    import threading
+
+    import burla_spark.rpm as rpm_mod
+
+    conf_cls = type(spark.conf)
+    writes: list = []
+    conf_set = conf_cls.set
+
+    def recording_set(self, key, value):
+        writes.append(key)
+        return conf_set(self, key, value)
+
+    monkeypatch.setattr(conf_cls, "set", recording_set)
+    assert sorted(remote_parallel_map(_print_index, range(20), spark=spark)) == list(range(20))
+    gen = remote_parallel_map(_print_index, range(20), spark=spark, generator=True)
+    assert sorted(gen) == list(range(20))
+    job = remote_parallel_map(_print_index, range(20), spark=spark, detach=True)
+    assert sorted(job.result(timeout=60)) == list(range(20))
+    assert writes == []
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    _, rows = rpm_mod._pickle_job(_print_index, range(1000))
+    plan = rpm_mod._Plan(spark, b"", rows, capture_stdout=False)
+
+    def build(parts):
+        for _ in range(25):
+            plan.build_df(rows, parts)
+
+    threads = [threading.Thread(target=build, args=(p,)) for p in (1, 2, 3, 7)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert writes == [] and spark.conf.get(key) == before
+
+
+def _four_megabytes(x):
+    return x, bytes(4_000_000)
+
+
+def test_generator_consumer_can_pause_past_the_connect_timeout(spark):
+    """A paused consumer backpressures the pushing tasks through a full
+    queue and closed TCP windows; a push blocked longer than the
+    client's 2 s connect timeout must wait, not fail the task."""
+    import time
+
+    gen = remote_parallel_map(_four_megabytes, range(12), spark=spark, generator=True)
+    got = [next(gen)]
+    time.sleep(4)
+    got += list(gen)
+    assert sorted(x for x, _ in got) == list(range(12))
+    assert all(len(blob) == 4_000_000 for _, blob in got)
 
 
 def test_generator_abandonment_cancels_job(spark):
@@ -571,8 +708,8 @@ def test_generator_bounded_queue_backpressure(spark):
 def test_repack_waves_complete_and_resize(spark, monkeypatch):
     """A16 dynamic repacking, wave granularity: the job runs in waves
     whose width is recomputed from live executor memory between waves —
-    all inputs complete exactly once, and the width probe is consulted
-    once per wave."""
+    all inputs complete exactly once, the width probe is consulted
+    once per wave, and each wave's stage runs at that wave's width."""
     import burla_spark.rpm as rpm_mod
 
     calls = []
@@ -583,13 +720,30 @@ def test_repack_waves_complete_and_resize(spark, monkeypatch):
         calls.append(w)
         return w
 
+    stages = []
+    build_df = rpm_mod._Plan.build_df
+
+    def recording_build_df(self, rows, parts, partial_dir=None):
+        stage = build_df(self, rows, parts, partial_dir)
+        stages.append((len(rows), stage.rdd.getNumPartitions()))
+        return stage
+
     monkeypatch.setattr(rpm_mod, "_live_ram_cap", fake_cap)
+    monkeypatch.setattr(rpm_mod._Plan, "build_df", recording_build_df)
     got = remote_parallel_map(
         lambda x: x * 3, range(50), spark=spark, repack=True, func_ram=1
     )
     assert sorted(got) == [x * 3 for x in range(50)]
     # wave sizes: 4*4=16, 2*4=8, then 8*4=32-wide waves drain the rest
+    # (each width capped at the cores)
     assert len(calls) >= 3
+    expected, remaining = [], 50
+    for w in calls:
+        width = max(1, min(spark.sparkContext.defaultParallelism, w))
+        wave = min(remaining, width * rpm_mod.WAVES_PER_WIDTH)
+        expected.append((wave, min(wave, width)))
+        remaining -= wave
+    assert remaining == 0 and stages == expected
 
 
 def test_repack_conflicts(spark):
